@@ -12,8 +12,9 @@ numbers:
 
 - ``index_build_docs_per_sec`` — full pipeline (tokenize -> map-side
   posting gen -> segment encode with block-max metadata) docs/sec;
-- ``bm25_p95_ms`` — p95 latency of repeated top-10 BM25 runs against the
-  pre-built postings relation (cached), the reference's serve-mode analogue.
+- ``bm25_p95_ms`` — p95 latency of repeated top-10 ``IndexServer.query``
+  calls (the path ``GET /search`` takes) on an index ``cli build`` makes
+  from the same documents.
 
 Scaling-efficiency evidence (same job at local[8] vs local[32]) lives in
 ``tools/bench_scaling.py`` and is reported in BASELINE.md per the sandbox
@@ -209,57 +210,35 @@ def main() -> None:
     times["html_extract"] = round(ext_sec, 3)
     extract_docs_per_sec = round(n_docs / ext_sec, 2) if ext_sec > 0 else None
 
-    # --- BM25 serve-mode latency: cached postings + precomputed
-    # index-time term_stats (the real serve configuration) ---
+    # --- serve latency: IndexServer.query, the path /search takes, on an
+    # index `cli build` makes from the same documents at its defaults ---
+    import contextlib
+    import io
+    import tempfile
+
+    from websearchengine_spark import cli
     from websearchengine_spark.operators import query as Q
     from websearchengine_spark.operators import score as S
-    from websearchengine_spark.operators import wand as W
+    from websearchengine_spark.serving import IndexServer
 
-    # serve-mode partitioning (IndexServer's serve_partitions): per-query
-    # latency is task-count-bound at serve scale, so the resident
-    # configuration coalesces the cached relations and pins a small
-    # shuffle width — measured 2-3x p50 cut vs the build-time widths
-    SERVE_PARTS = 8
-    build_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(SERVE_PARTS))
-    cached = postings.coalesce(SERVE_PARTS).cache()
-    cached.count()
-    # serve-mode stats: the reference holds term stats in memory
-    # (IndexerInvertedCompressed serve maps); the dict compiles per-query
-    # idf into literals -> zero joins, one Spark job per query
-    stats_map = {r.term: r.df for r in indexer.term_stats(cached).collect()}
+    work = tempfile.TemporaryDirectory()
+    docs.select("url", "text").write.parquet(f"{work.name}/corpus")
+    with contextlib.redirect_stdout(io.StringIO()):  # keep ONE JSON line
+        cli.main(["build", "--corpus", f"{work.name}/corpus",
+                  "--out", f"{work.name}/index"])
+    srv = IndexServer(spark, f"{work.name}/index", preload_stats=True)
     queries = ["spark join", "data table", "hash merge sort", "query plan"]
     # serve metrics use the SAME interleaved best-of-N methodology as the
-    # batch suite (round-3 verdict; extended to the serve loops per the
-    # round-4 verdict): the per-iteration latency is the min across
-    # passes, raw per-pass values ride in serve_trials so run-to-run
-    # deltas separate plan changes from shared-host neighbor noise
+    # batch suite: the per-iteration latency is the min across passes,
+    # raw per-pass values ride in serve_trials so run-to-run deltas
+    # separate plan changes from shared-host neighbor noise
     serve_trials: dict[str, list] = {}
-    # plan-compilation warmup so p95 reflects steady-state serve latency
-    _warm_tokens, _warm_words, _ = Q.split_tokens(queries[0])
-    S.topk(
-        S.bm25_scores(
-            Q.word_token_postings(cached, _warm_words),
-            _warm_tokens, n_docs, avgdl, "conjunctive", stats_map,
-        ),
-        10,
-    ).collect()
-
-    def _bm25_once(q: str) -> None:
-        tokens, words, _ = Q.split_tokens(q)
-        tp = Q.word_token_postings(cached, words)
-        S.topk(
-            S.bm25_scores(
-                tp, tokens, n_docs, avgdl, "conjunctive", stats_map
-            ),
-            10,
-        ).collect()
-
+    srv.query(queries[0])  # plan-compilation warmup
     bm25_passes = [[], []]
     for pass_lat in bm25_passes:
         for i in range(20):
             t0 = time.time()
-            _bm25_once(queries[i % len(queries)])
+            srv.query(queries[i % len(queries)])
             pass_lat.append(time.time() - t0)
     lat = sorted(min(ts) for ts in zip(*bm25_passes))
     p95 = lat[max(0, int(len(lat) * 0.95) - 1)]
@@ -268,72 +247,37 @@ def main() -> None:
     serve_trials["bm25"] = [
         [round(t, 3) for t in p] for p in bm25_passes
     ]
-
-    # --- WAND segment-path latency (the at-scale serve path); the
-    # segment cache keeps 2x width — WAND's decode pass is CPU-bound
-    # Python and wants parallelism while shuffle stages stay narrow ---
-    segs_cached = segs.coalesce(SERVE_PARTS * 2).cache()
-    segs_cached.count()
-    # per-term chunk counts (the cmd_build term_stats sidecar column):
-    # feeds the cost-based prune decision — tiny chunk sets take the
-    # single-pass plan, large ones keep the 3-job block-max prune
-    chunk_map = {
-        r.term: r.n
-        for r in segs_cached.groupBy("term")
-        .agg(F.count_distinct("chunk").alias("n"))
-        .collect()
-    }
-    wand_passes = [[], []]
-    for pass_lat in wand_passes:
-        for i in range(8):
-            q = queries[i % len(queries)]
-            _, words, _ = Q.split_tokens(q)
-            t0 = time.time()
-            W.bm25_topk_segments(
-                segs_cached, words, n_docs, avgdl, k=10,
-                mode="conjunctive", term_df=stats_map, eager=True,
-                term_chunks=chunk_map,
-            ).collect()
-            pass_lat.append(time.time() - t0)
-    wlat = sorted(min(ts) for ts in zip(*wand_passes))
-    times["wand_query_p50"] = round(wlat[len(wlat) // 2], 3)
-    times["wand_query_p95"] = round(
-        wlat[max(0, int(len(wlat) * 0.95) - 1)], 3
-    )
-    serve_trials["wand"] = [
-        [round(t, 3) for t in p] for p in wand_passes
-    ]
-    # --- phrase serve-path A/B: full positional decode vs the serve
-    # path (Q.token_postings_from_segments WITH the sidecar chunk map).
-    # The sf0.1 corpus is dense (31-term vocabulary, every chunk holds
-    # every phrase word), so the metadata prune cannot skip anything
-    # here and the cost model elects the single-pass plan — the A/B
-    # verifies the serve path never pays the prune's job overhead on a
-    # corpus where it can't win; the actual chunk-skipping win is
+    # --- phrase serve-path A/B: full positional decode vs the served
+    # chunk-pruned path.  The sf0.1 corpus is dense (31-term vocabulary,
+    # every chunk holds every phrase word), so the metadata prune cannot
+    # skip anything here and the cost model elects the single-pass plan —
+    # the A/B verifies the serve path never pays the prune's job overhead
+    # on a corpus where it can't win; the actual chunk-skipping win is
     # pytest-gated on sparse data
     # (tests/test_wand.py::test_phrase_pruned_segments_match_full_decode).
     pq = '"spark join"'
-    ptokens, _, pphrases = Q.split_tokens(pq)
+    _, _, pphrases = Q.split_tokens(pq)
     pneeded = sorted({w for p in pphrases for w in p.split()})
     flat, plat = [], []
     for _ in range(3):
         t0 = time.time()
         full_post = indexer.decode_segments(
-            segs_cached.where(F.col("term").isin(pneeded)),
+            srv.segs.where(F.col("term").isin(pneeded)),
             with_positions=True,
         )
-        S.rank_bm25(full_post, pq, n_docs, avgdl, k=10).collect()
+        S.rank_bm25(
+            full_post, pq, srv.stats["num_docs"], srv.stats["avgdl"], k=10
+        ).collect()
         flat.append(time.time() - t0)
         t0 = time.time()
-        tp = Q.token_postings_from_segments(
-            segs_cached, pq, term_chunks=chunk_map
-        )
-        S.topk(S.bm25_scores(tp, ptokens, n_docs, avgdl), 10).collect()
+        srv.query(pq)
         plat.append(time.time() - t0)
     times["phrase_full_p50"] = round(sorted(flat)[1], 3)
     times["phrase_pruned_p50"] = round(sorted(plat)[1], 3)
     serve_trials["phrase_full"] = [round(t, 3) for t in flat]
     serve_trials["phrase_pruned"] = [round(t, 3) for t in plat]
+    srv.close()
+    work.cleanup()
 
     # --- multimodal feature extraction: real decode (BMP/PNG/JPEG/WAV/y4m)
     # map-side via mapInPandas; count() executes the full UDF (Python runs
@@ -364,10 +308,6 @@ def main() -> None:
         }
         sub.unpersist()
     media.unpersist()
-
-    cached.unpersist()
-    segs_cached.unpersist()
-    spark.conf.set("spark.sql.shuffle.partitions", build_shuffle)
 
     total = round(time.time() - t_start, 3)
     print(

@@ -259,11 +259,86 @@ def test_index_server_close_restores_shuffle_conf(spark, http_index):
     from websearchengine_spark import serving
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    srv = serving.IndexServer(spark, http_index, serve_partitions=4)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-    assert srv.term_df is not None  # stats sidecar preloaded
-    srv.close()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        srv = serving.IndexServer(spark, http_index)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+            serving.SERVE_PARTITIONS
+        )
+        assert srv.term_df is not None  # stats sidecar preloaded
+        srv.close()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _get(base: str, path: str) -> tuple[int, str]:
+    """(status, body) of one GET, error statuses included."""
+    import urllib.error
+    from urllib.request import urlopen
+
+    try:
+        with urlopen(base + path) as r:
+            return r.status, r.read().decode()
+    except urllib.error.HTTPError as e:
+        return e.code, e.read().decode()
+
+
+def test_http_count_args_positive_and_capped(spark, http_index):
+    """num/numdocs/numterms that are not positive integers are ignored,
+    like any invalid CGI value (QueryHandler.java:85-128); num and
+    numdocs are capped at the index's doc count and numterms at 2^31-1,
+    so no value reaches Spark's limit() out of range."""
+    from websearchengine_spark.serving import IndexServer, serve
+
+    srv = IndexServer(spark, http_index, preload_stats=True)
+    httpd = serve(srv, port=0, background=True)
+    try:
+        base = f"http://127.0.0.1:{httpd.server_address[1]}"
+        status, default = _get(base, "/search?query=web+search")
+        assert status == 200 and default
+        for num in ("0", "-1", "-10"):
+            assert _get(base, f"/search?query=web+search&num={num}") == (
+                200, default
+            )
+        status, body = _get(base, "/search?query=web+search&num=99999999999")
+        everything = srv.query("web search", k=srv.stats["num_docs"])
+        assert status == 200 and len(body.splitlines()) == len(everything)
+
+        status, prf_default = _get(base, "/prf?query=web+search")
+        assert status == 200 and prf_default
+        for v in ("0", "-3"):
+            assert _get(
+                base, f"/prf?query=web+search&numdocs={v}&numterms={v}"
+            ) == (200, prf_default)
+        status, body = _get(
+            base, "/prf?query=web+search&numdocs=99999999999&numterms=99999999999"
+        )
+        assert status == 200 and body.splitlines()
+    finally:
+        httpd.shutdown()
+        srv.close()
+
+
+def test_http_500_carries_a_fixed_message():
+    """A failing request answers 500 with a fixed message: the exception
+    text (paths, plan fragments) never reaches the client."""
+    from types import SimpleNamespace
+
+    from websearchengine_spark.serving import serve
+
+    def boom(*a, **k):
+        raise RuntimeError("secret /internal/path")
+
+    stub = SimpleNamespace(stats={"num_docs": 3}, query=boom, prf=boom)
+    httpd = serve(stub, port=0, background=True)
+    try:
+        base = f"http://127.0.0.1:{httpd.server_address[1]}"
+        for path in ("/search?query=web", "/prf?query=web"):
+            status, body = _get(base, path)
+            assert status == 500 and "secret" not in body
+    finally:
+        httpd.shutdown()
 
 
 def test_build_from_warc_matches_parquet(spark, corpus_dir, tmp_path, capsys):

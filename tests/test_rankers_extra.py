@@ -112,84 +112,3 @@ def test_linear_blend_parity(spark, spark_index, small_corpus, query):
     assert [r.doc_id for r in got] == [d for d, _ in want]
     for r, (_, s) in zip(got, want):
         assert r.score == pytest.approx(s, rel=1e-9)
-
-
-@pytest.mark.parametrize("query", ["web search", "data mining", "google"])
-def test_bm25_stats_dict_fast_path_parity(spark, spark_index, query):
-    """The serve fast-path (driver-side {term: df} dict -> literal-map
-    idf, zero joins) must score identically to the self-derived-stats
-    plan — and its physical plan must contain no join at all."""
-    from websearchengine_spark.operators import indexer, query as Q, score as S
-
-    postings = spark_index["postings"]
-    n, avgdl = spark_index["num_docs"], spark_index["avgdl"]
-    tokens, words, _ = Q.split_tokens(query)
-    tp = Q.word_token_postings(postings, words)
-    base = S.topk(S.bm25_scores(tp, tokens, n, avgdl), 10).collect()
-    stats_map = {r.term: r.df for r in indexer.term_stats(postings).collect()}
-    fast_df = S.topk(S.bm25_scores(tp, tokens, n, avgdl, "conjunctive", stats_map), 10)
-    fast = fast_df.collect()
-    assert [(r.doc_id, round(r.score, 9)) for r in base] == [
-        (r.doc_id, round(r.score, 9)) for r in fast
-    ]
-    plan = fast_df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-
-
-@pytest.mark.parametrize("query", ["web search", "data mining"])
-def test_ql_ctf_dict_fast_path_parity(spark, spark_index, query):
-    """QL serve fast-path ({term: ctf} dict -> literal prior map, zero
-    joins) must match the self-derived-stats plan exactly."""
-    from websearchengine_spark.operators import indexer, query as Q, score as S
-
-    postings = spark_index["postings"]
-    tot = spark_index["total_terms"]
-    tokens, words, _ = Q.split_tokens(query)
-    tp = Q.word_token_postings(postings, words)
-    base = S.topk(S.ql_scores(tp, tokens, tot), 10).collect()
-    ctf_map = {r.term: r.ctf for r in indexer.term_stats(postings).collect()}
-    fast_df = S.topk(S.ql_scores(tp, tokens, tot, ctf_map), 10)
-    fast = fast_df.collect()
-    assert [(r.doc_id, round(r.score, 15)) for r in base] == [
-        (r.doc_id, round(r.score, 15)) for r in fast
-    ]
-    plan = fast_df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-
-
-def test_ql_fast_path_absent_token_empty(spark, spark_index):
-    from websearchengine_spark.operators import query as Q, score as S
-
-    postings = spark_index["postings"]
-    tp = Q.word_token_postings(postings, ["zzzznotaterm"])
-    out = S.ql_scores(tp, ["zzzznotaterm"], spark_index["total_terms"], {})
-    assert out.count() == 0
-
-
-def test_bm25_stats_dict_stale_token_no_null_scores(spark, spark_index):
-    """Disjunctive fast path with a dict missing one live token must drop
-    that token (like the join path's inner join), never emit NULL-score
-    rows."""
-    from websearchengine_spark.operators import indexer, query as Q, score as S
-
-    postings = spark_index["postings"]
-    n, avgdl = spark_index["num_docs"], spark_index["avgdl"]
-    tokens = ["web", "search"]
-    tp = Q.word_token_postings(postings, tokens)
-    stats_map = {r.term: r.df for r in indexer.term_stats(postings).collect()}
-    stale = {"web": stats_map["web"]}  # 'search' missing
-    rows = S.topk(
-        S.bm25_scores(tp, tokens, n, avgdl, "disjunctive", stale), 10
-    ).collect()
-    assert rows and all(r.score is not None for r in rows)
-    # matches the join path restricted to the known token
-    only_web = S.topk(
-        S.bm25_scores(
-            Q.word_token_postings(postings, ["web"]), ["web"], n, avgdl,
-            "disjunctive",
-        ),
-        10,
-    ).collect()
-    assert [(r.doc_id, round(r.score, 9)) for r in rows] == [
-        (r.doc_id, round(r.score, 9)) for r in only_web
-    ]

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from websearchengine_spark.functions import codec
 from websearchengine_spark.operators import indexer
 from websearchengine_spark.oracle import engine as oracle_eng
 
@@ -33,6 +34,23 @@ class TestDocIds:
             for r in indexer.assign_doc_ids(df, n_parts=7).collect()
         }
         assert a == b
+
+    def test_ids_are_url_rank_past_the_sampler_cap(self, spark):
+        """3,000 urls in 4 input partitions: more rows than Spark's range
+        sampler keeps, so every action that re-executes the plan would
+        sample its own bounds.  Ids must still be the 0-based url rank."""
+        import random
+
+        urls = [f"http://site{i % 37}.example/{i:05d}" for i in range(3000)]
+        random.Random(7).shuffle(urls)
+        df = spark.createDataFrame(
+            [(u, "x") for u in urls], "url string, text string"
+        ).repartition(4)
+        got = {
+            r.url: r.doc_id
+            for r in indexer.assign_doc_ids(df).select("url", "doc_id").collect()
+        }
+        assert got == {u: i for i, u in enumerate(sorted(urls))}
 
 
 class TestPostings:
@@ -69,11 +87,15 @@ class TestPostings:
 
 class TestSegments:
     def test_segment_roundtrip(self, spark_index, small_corpus):
-        """postings -> compressed segments -> decode == original postings."""
+        """postings -> compressed segments -> decode == original postings,
+        with each block's exact max and sum of tf."""
         _, idx = small_corpus
         seg = indexer.build_segments(
             spark_index["postings"], avgdl=spark_index["avgdl"], chunk_docs=32
         )
+        for r in seg.collect():
+            tfs = codec.decode_varints(r.tf_bytes)
+            assert r.block_max_tf == tfs.max() and r.sum_tf == tfs.sum()
         back = indexer.decode_segments(seg, with_positions=True)
         got = {
             (r.term, r.doc_id): (r.tf, list(r.positions), r.dl)

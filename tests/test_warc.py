@@ -241,3 +241,26 @@ def test_streaming_parse_batches_large_file():
     assert sorted(got["payload_text"]) == sorted(
         f"body {i}" for i in range(40)
     )
+
+
+def test_short_reads_are_completed():
+    """A source may return fewer bytes than asked (pipes, sockets, raw
+    files): a payload read loops until it has them all."""
+    import io
+
+    class OneByteAtATime(io.RawIOBase):
+        def __init__(self, data: bytes):
+            self._src = io.BytesIO(data)
+
+        def readable(self) -> bool:
+            return True
+
+        def readinto(self, b) -> int:
+            chunk = self._src.read(1)
+            b[: len(chunk)] = chunk
+            return len(chunk)
+
+    rec = warc._build_record(3, "u3", b"a payload longer than one byte",
+                             "conversion", warc.WARC_EPOCH)
+    (got,) = warc.iter_warc_records(OneByteAtATime(rec), "p")
+    assert got["payload_text"] == "a payload longer than one byte"

@@ -1,11 +1,11 @@
-"""Delta-gap + varint posting-list codec with block-max metadata.
+"""Delta-gap + varint posting-list codec.
 
 The reference stores delta-gapped doc ids and positions as Java ints in text
 files (hw2/src/edu/nyu/cs/cs2580/IndexerInvertedCompressed.java:151-169
 encode, :371-398 prefix-sum decode).  We keep the delta-gap semantics and add
 the byte layer the north_star asks for: LEB128-style varints packed with
-numpy, plus per-block max term-frequency metadata so the scorer can do
-block-max WAND pruning.
+numpy.  Blocks of ``BLOCK_DOCS`` postings and their block-max metadata are
+assembled by ``indexer.build_segments``.
 
 Pure numpy, no Spark imports — used inside Arrow UDFs and by tests.
 """
@@ -24,33 +24,21 @@ def encode_varints(values: np.ndarray) -> bytes:
     all but the last byte.
     """
     v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # number of 7-bit groups per value (at least 1)
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        live = tmp != 0
-        if not live.any():
-            break
-        nbits[live] += 1
-        tmp >>= np.uint64(7)
-    nbytes = np.maximum(nbits, 1)
-    total = int(nbytes.sum())
-    out = np.empty(total, dtype=np.uint8)
-    # byte slot index ranges per value
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    # fill byte-by-byte over the max width (<=10 for uint64) — loop over
-    # byte position, vectorized over values
-    maxw = int(nbytes.max())
+    return _encode(v, varint_byte_lengths(v))
+
+
+def _encode(v: np.ndarray, nbytes: np.ndarray) -> bytes:
+    """The byte loop behind both encoders: ``v`` (uint64) as varints of
+    ``nbytes`` bytes each, filled one byte position at a time, vectorized
+    over values (<= 10 positions for uint64)."""
+    out = np.empty(int(nbytes.sum()), dtype=np.uint8)
+    starts = np.cumsum(nbytes) - nbytes
     vals = v.copy()
-    for k in range(maxw):
+    for k in range(int(nbytes.max()) if nbytes.size else 0):
         live = nbytes > k
-        idx = starts[live] + k
         b = (vals[live] & np.uint64(0x7F)).astype(np.uint8)
         more = (k + 1) < nbytes[live]
-        out[idx] = b | (more.astype(np.uint8) << 7)
+        out[starts[live] + k] = b | (more.astype(np.uint8) << 7)
         vals[live] >>= np.uint64(7)
     return out.tobytes()
 
@@ -81,24 +69,10 @@ def encode_varints_segmented(
     if seg_lengths.size == 0:
         return []
     assert (seg_lengths > 0).all(), "zero-length segments unsupported"
-    # single byte-length pass shared by the encoder and the slicer
-    # (encode_varints would otherwise recompute it internally)
+    # one byte-length pass shared by the encoder and the slicer
     v = np.asarray(values, dtype=np.uint64)
     nbytes = varint_byte_lengths(v)
-    total = int(nbytes.sum())
-    out = np.empty(total, dtype=np.uint8)
-    ends = np.cumsum(nbytes)
-    val_starts = ends - nbytes
-    vals = v.copy()
-    maxw = int(nbytes.max()) if nbytes.size else 0
-    for kk in range(maxw):
-        live = nbytes > kk
-        idx = val_starts[live] + kk
-        bts = (vals[live] & np.uint64(0x7F)).astype(np.uint8)
-        more = (kk + 1) < nbytes[live]
-        out[idx] = bts | (more.astype(np.uint8) << 7)
-        vals[live] >>= np.uint64(7)
-    buf = out.tobytes()
+    buf = _encode(v, nbytes)
     starts = np.concatenate(([0], np.cumsum(seg_lengths)[:-1]))
     seg_bytes = np.add.reduceat(nbytes, starts)
     offs = np.concatenate(([0], np.cumsum(seg_bytes)))
@@ -160,17 +134,6 @@ def delta_decode(gaps: np.ndarray) -> np.ndarray:
     return np.cumsum(np.asarray(gaps, dtype=np.int64))
 
 
-def encode_positions(positions_per_doc: list[np.ndarray]) -> bytes:
-    """Positions for a run of docs: per doc, delta-gapped then varint; doc
-    runs concatenated (lengths come from the tf array)."""
-    if not positions_per_doc:
-        return b""
-    flat = np.concatenate(
-        [delta_encode(np.asarray(p, dtype=np.int64)) for p in positions_per_doc]
-    )
-    return encode_varints(flat)
-
-
 def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     flat = decode_varints(buf)
     out: list[np.ndarray] = []
@@ -180,39 +143,3 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
         off += tf
     return out
 
-
-def encode_block(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    positions_per_doc: list[np.ndarray] | None,
-) -> dict:
-    """Encode ONE block (<= BLOCK_DOCS postings, doc_ids ascending) into the
-    segment-row payload.  ``block_max_tf`` supports block-max pruning; the
-    tf-normalized upper bound for BM25 additionally needs min doc_len, so we
-    carry ``block_max_weight`` = max(tf / (tf + k1*(1-b+b*dl/avgdl))) filled
-    in by the caller who knows dl/avgdl."""
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    assert doc_ids.size == tfs.size
-    row = {
-        "n_docs": int(doc_ids.size),
-        "first_doc_id": int(doc_ids[0]) if doc_ids.size else -1,
-        "last_doc_id": int(doc_ids[-1]) if doc_ids.size else -1,
-        "doc_gap_bytes": encode_varints(delta_encode(doc_ids)),
-        "tf_bytes": encode_varints(tfs),
-        "block_max_tf": int(tfs.max()) if tfs.size else 0,
-        "sum_tf": int(tfs.sum()) if tfs.size else 0,
-        "pos_bytes": encode_positions(positions_per_doc)
-        if positions_per_doc is not None
-        else b"",
-    }
-    return row
-
-
-def decode_block(row: dict, with_positions: bool = False):
-    """Inverse of :func:`encode_block` -> (doc_ids, tfs[, positions])."""
-    doc_ids = delta_decode(decode_varints(row["doc_gap_bytes"]))
-    tfs = decode_varints(row["tf_bytes"])
-    if with_positions:
-        return doc_ids, tfs, decode_positions(row["pos_bytes"], tfs)
-    return doc_ids, tfs

@@ -4,11 +4,12 @@ Scale design (the part the reference solves with spill/merge under a 512 MB
 heap, IndexerInvertedCompressed.java:124-143, :301-359):
 
 - **doc_id assignment** is a deterministic global rank over ``url`` computed
-  WITHOUT a single-partition sort: range-repartition by url, sort within
-  partitions, then add per-partition offsets (two-pass; the offsets table is
-  #partitions rows).  The rank is partitioning-independent, so the same
-  corpus yields the same doc_ids at any cluster size — required for
-  rank-identical results (SURVEY.md §1.2 docid contract).
+  WITHOUT a single-partition sort: url ranges from driver-side literal
+  bounds, a row number within each range, plus per-range offsets
+  (two-pass; the offsets table is #ranges rows).  The rank is
+  partitioning-independent, so the same corpus yields the same doc_ids at
+  any cluster size — required for rank-identical results (SURVEY.md §1.2
+  docid contract).
 - **posting generation is map-side only**: the tokenizer UDF aggregates
   (term -> tf, positions) WITHIN each document, so building the
   ``postings(term, doc_id, tf, positions, dl)`` relation needs NO shuffle at
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from websearchengine_spark.functions import codec
+from websearchengine_spark.functions import bm25, codec
 from websearchengine_spark.functions.textnorm import tokenize_document
 
 DEFAULT_CHUNK_DOCS = 1 << 16  # salt-range width for segment grouping
@@ -50,8 +51,15 @@ def assign_doc_ids(corpus: DataFrame, n_parts: int | None = None) -> DataFrame:
     """0-based dense rank over url, computed scalably.
 
     Equivalent to ``row_number() over (order by url)`` - 1, but avoids the
-    single-partition window: range-partition by url, count rows per
-    partition (tiny driver-side pass), then offset local row numbers.
+    single-partition window.  Url range bounds are taken ONCE, on the
+    driver, from a hash-ordered sample, and enter the plan as literals:
+    each row's range is the number of bounds below its url, the ranges'
+    row counts give each range's offset (a tiny driver-side pass), and a
+    window per range numbers its rows by url.  Every action that
+    re-executes the plan therefore numbers rows by the true url rank;
+    bounds that Spark re-sampled per action would not match the offsets.
+    The ranges are many per output partition, so range-partitioning on
+    them balances the partitions whatever bounds Spark samples there.
     """
     spark = corpus.sparkSession
     if n_parts is None:
@@ -59,53 +67,46 @@ def assign_doc_ids(corpus: DataFrame, n_parts: int | None = None) -> DataFrame:
         # .rdd forces a DataFrame->RDD conversion of the whole scan plan
         # just to read a number
         n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    parted = corpus.repartitionByRange(n_parts, "url").sortWithinPartitions("url")
-
-    counts_schema = T.StructType(
-        [
-            T.StructField("pid", T.IntegerType()),
-            T.StructField("n", T.LongType()),
-        ]
+    n_ranges = 16 * n_parts
+    # xxhash order is a uniform sample, bounded by n_ranges on the driver
+    sample = sorted(
+        r.url
+        for r in corpus.select("url")
+        .orderBy(F.xxhash64("url"))
+        .limit(8 * n_ranges)
+        .collect()
     )
-
-    def _count(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = 0
-        pid = -1
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for b in batches:
-            n += len(b)
-        yield pd.DataFrame({"pid": [pid], "n": [n]})
-
-    counts = sorted(
-        parted.select("url").mapInPandas(_count, counts_schema).collect(),
-        key=lambda r: r.pid,
+    bounds = sorted(
+        {sample[i * len(sample) // n_ranges] for i in range(1, n_ranges)}
+        if sample
+        else ()
     )
-    offsets = {}
-    acc = 0
-    for r in counts:
-        offsets[r.pid] = acc
-        acc += r.n
-    boff = spark.sparkContext.broadcast(offsets)
-
-    out_schema = T.StructType(
-        corpus.schema.fields + [T.StructField("doc_id", T.LongType(), False)]
+    keyed = corpus.withColumn(
+        "_range",
+        F.size(
+            F.filter(
+                F.array(*[F.lit(u) for u in bounds]),
+                lambda u: u < F.col("url"),
+            )
+        ),
     )
-
-    def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        base = boff.value.get(pid, 0)
-        seen = 0
-        for b in batches:
-            b = b.copy()
-            b["doc_id"] = range(base + seen, base + seen + len(b))
-            seen += len(b)
-            yield b
-
-    return parted.mapInPandas(_assign, out_schema)
+    counts = dict(keyed.groupBy("_range").count().collect())
+    offsets, acc = [], 0
+    for i in range(len(bounds) + 1):
+        offsets.append(acc)
+        acc += counts.get(i, 0)
+    offset = F.element_at(
+        F.array(*[F.lit(o) for o in offsets]), F.col("_range") + 1
+    )
+    by_url = Window.partitionBy("_range").orderBy("url")
+    return (
+        keyed.repartitionByRange(n_parts, "_range")
+        .withColumn(
+            "doc_id",
+            (offset + F.row_number().over(by_url) - 1).cast("long"),
+        )
+        .drop("_range")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -279,10 +280,6 @@ SEGMENT_SCHEMA = T.StructType(
     ]
 )
 
-BM25_K1 = 1.2
-BM25_B = 0.75
-
-
 def build_segments(
     postings: DataFrame,
     avgdl: float,
@@ -296,8 +293,8 @@ def build_segments(
     Grouping key (term, doc_id // chunk_docs) bounds every task at
     chunk_docs postings regardless of term frequency (heavy-hitter safe);
     blocks of ``block_docs`` postings carry ``block_max_weight`` =
-    max over block of the BM25 tf-part, enabling block-max WAND pruning
-    (score upper bound = idf * (k1+1) * block_max_weight).
+    max over block of ``bm25.tf_norm``, enabling block-max WAND pruning
+    (score upper bound = ``bm25.weight(idf, block_max_weight)``).
 
     Physical shape: ``repartition(term, chunk)`` + sort-within-partitions
     + ONE streaming mapInPandas that walks group boundaries with numpy and
@@ -308,7 +305,6 @@ def build_segments(
     batch boundaries are carried over inside the partition iterator."""
     import numpy as np
 
-    k1, b = BM25_K1, BM25_B
     spark = postings.sparkSession
     if n_parts is None:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -381,9 +377,10 @@ def build_segments(
             np.maximum.reduceat(tfs, blk_starts).tolist()
         )
         out["sum_tf"].extend(np.add.reduceat(tfs, blk_starts).tolist())
-        w = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
         out["block_max_weight"].extend(
-            np.maximum.reduceat(w, blk_starts).tolist()
+            np.maximum.reduceat(
+                bm25.tf_norm(tfs, dls, avgdl), blk_starts
+            ).tolist()
         )
         if poss is None:
             out["pos_bytes"].extend([b""] * n_blk)

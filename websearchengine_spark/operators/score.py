@@ -1,8 +1,8 @@
 """Ranking/scoring operators (SURVEY.md §2.5) — all Catalyst-native column
 expressions over the token-postings relation; no Python in the hot path.
 
-- BM25 (k1=1.2, b=0.75, Lucene idf) — the engine's primary ranker per
-  BASELINE.json north_star.
+- BM25 (``functions.bm25``: k1=1.2, b=0.75, Lucene idf) — the engine's
+  primary ranker per BASELINE.json north_star.
 - Reference-parity QL (Jelinek-Mercer β=0.5, RankerComprehensive.java:43-53)
   with the product computed as exp(sum(log ...)), duplicates in the query
   handled by per-token multiplicity weights.
@@ -21,10 +21,9 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from websearchengine_spark.functions import bm25
 from websearchengine_spark.operators import query as Q
 
-BM25_K1 = 1.2
-BM25_B = 0.75
 QL_BETA = 0.5
 
 
@@ -43,72 +42,21 @@ def bm25_scores(
     num_docs: int,
     avgdl: float,
     mode: str = "conjunctive",
-    term_stats: DataFrame | dict | None = None,
 ) -> DataFrame:
     """(doc_id, score) — BM25 summed over query tokens (×multiplicity).
 
     Conjunctive filters to docs holding ALL distinct tokens; disjunctive
-    scores any match.  df per token comes from the pruned relation itself
-    (correct for phrases too) — or, serve-mode, from a precomputed
-    ``term_stats`` artifact: either the (term, df, ...) DataFrame
-    (indexer.term_stats; a broadcast join — the path that scales to
-    arbitrary vocabularies) or a driver-side ``{term: df}`` dict (the
-    reference's in-memory stats maps), which compiles idf and query
-    multiplicity into LITERAL maps — zero joins, one job per query, the
-    lowest-latency plan.  Only valid when every token is a single word."""
-    import math
-
+    scores any match.  df per token comes from the pruned relation itself,
+    which is correct for phrase tokens too (their stats exist nowhere
+    else); word-only serving takes ``wand.bm25_topk_segments`` instead."""
     spark = tok_postings.sparkSession
     n_distinct = len(set(tokens))
-    k_term = (
-        F.col("tf")
-        * F.lit(BM25_K1 + 1.0)
-        / (
-            F.col("tf")
-            + F.lit(BM25_K1)
-            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl))
-        )
-    )
-    if isinstance(term_stats, dict):
-        # serve fast-path: per-token qcount·idf folded into one literal map
-        counts = Counter(tokens)
-        wmap = {}
-        for t, qn in counts.items():
-            df = term_stats.get(t, 0)
-            if df <= 0:
-                continue
-            wmap[t] = qn * math.log(
-                1.0 + (num_docs - df + 0.5) / (df + 0.5)
-            )
-        if not wmap:
-            return spark.createDataFrame([], "doc_id long, score double")
-        lit_w = F.create_map(
-            *[x for t, v in wmap.items() for x in (F.lit(t), F.lit(v))]
-        )[F.col("token")]
-        # keep only tokens the stats know (the join path's inner join did
-        # this implicitly) — otherwise a stale dict would yield NULL
-        # scores for docs matched solely by an unknown token
-        tok_postings = tok_postings.where(F.col("token").isin(list(wmap)))
-        scored = tok_postings.groupBy("doc_id").agg(
-            F.sum(lit_w * k_term).alias("score"),
-            F.count_distinct("token").alias("n_hit"),
-        )
-        if mode == "conjunctive":
-            scored = scored.where(F.col("n_hit") == n_distinct)
-        return scored.select("doc_id", "score")
-    if term_stats is not None:
-        stats = term_stats.where(F.col("term").isin(tokens)).select(
-            F.col("term").alias("token"), "df"
-        )
-    else:
-        stats = Q.token_stats(tok_postings)
+    stats = Q.token_stats(tok_postings)
     qc = _qcount_df(spark, tokens)
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(num_docs)) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
+    w = F.col("qcount") * bm25.weight(
+        bm25.idf(F.col("df"), float(num_docs), F.log),
+        bm25.tf_norm(F.col("tf"), F.col("dl"), avgdl),
     )
-    w = F.col("qcount") * idf * k_term
     scored = (
         tok_postings.join(F.broadcast(stats), "token")
         .join(F.broadcast(qc), "token")
@@ -127,45 +75,14 @@ def ql_scores(
     tok_postings: DataFrame,
     tokens: list[str],
     total_terms: int,
-    term_ctf: dict | None = None,
 ) -> DataFrame:
     """(doc_id, score) — reference QL over CONJUNCTIVE matches:
     score = Π_tokens [(1-β)·tf/dl + β·ctf/|C|], |C| int-truncated
     (RankerComprehensive.java:43-53).  Product via exp(Σ qcount·ln(term))
-    — every factor > 0 on conjunctive matches.
-
-    ``term_ctf`` (optional {term: ctf} dict — serve mode, the
-    reference's in-memory stats): the collection prior compiles into a
-    literal map, removing both broadcast joins (zero-join single-job
-    plan, same as the bm25_scores fast path)."""
+    — every factor > 0 on conjunctive matches."""
     spark = tok_postings.sparkSession
     n_distinct = len(set(tokens))
     c = int(total_terms)
-    if term_ctf is not None:
-        counts = Counter(tokens)
-        if any(term_ctf.get(t, 0) <= 0 for t in counts):
-            # a token absent from the corpus zeroes every product
-            return spark.createDataFrame([], "doc_id long, score double")
-        qn_map = F.create_map(
-            *[x for t, n in counts.items() for x in (F.lit(t), F.lit(float(n)))]
-        )[F.col("token")]
-        prior_map = F.create_map(
-            *[
-                x
-                for t, n in counts.items()
-                for x in (F.lit(t), F.lit(QL_BETA * term_ctf[t] / float(c)))
-            ]
-        )[F.col("token")]
-        factor = F.lit(1.0 - QL_BETA) * F.col("tf") / F.col("dl") + prior_map
-        return (
-            tok_postings.groupBy("doc_id")
-            .agg(
-                F.exp(F.sum(qn_map * F.log(factor))).alias("score"),
-                F.count_distinct("token").alias("n_hit"),
-            )
-            .where(F.col("n_hit") == n_distinct)
-            .select("doc_id", "score")
-        )
     stats = Q.token_stats(tok_postings)
     qc = _qcount_df(spark, tokens)
     factor = (

@@ -38,10 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from websearchengine_spark.functions import codec
-
-BM25_K1 = 1.2
-BM25_B = 0.75
+from websearchengine_spark.functions import bm25, codec
 
 _SCORE_SCHEMA = T.StructType(
     [
@@ -52,17 +49,9 @@ _SCORE_SCHEMA = T.StructType(
 )
 
 
-def _idf_map(term_df: dict[str, int], num_docs: int) -> dict[str, float]:
-    return {
-        t: float(np.log(1.0 + (num_docs - df + 0.5) / (df + 0.5)))
-        for t, df in term_df.items()
-    }
-
-
 def _decode_score_udf(idfs: dict[str, float], avgdl: float, theta: float):
     """mapInPandas kernel: varint-decode blocks, per-block ub skip, emit
     (doc_id, partial, term) BM25 partials."""
-    k1, b = BM25_K1, BM25_B
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for bdf in batches:
@@ -74,18 +63,15 @@ def _decode_score_udf(idfs: dict[str, float], avgdl: float, theta: float):
                 bdf["doc_gap_bytes"], bdf["tf_bytes"], bdf["dl_bytes"],
             ):
                 idf = idfs[term]
-                block_ub = idf * (k1 + 1.0) * bmw
                 # conservative per-block skip: this block's best possible
                 # total = its own ub + best the OTHER terms can add in the
                 # chunk (residual precomputed relationally)
-                if block_ub + residual < theta:
+                if bm25.weight(idf, bmw) + residual < theta:
                     continue
                 doc_ids = codec.delta_decode(codec.decode_varints(gaps))
                 tfs = codec.decode_varints(tfb).astype(np.float64)
                 dls = codec.decode_varints(dlb).astype(np.float64)
-                w = idf * (k1 + 1.0) * tfs / (
-                    tfs + k1 * (1.0 - b + b * dls / avgdl)
-                )
+                w = bm25.weight(idf, bm25.tf_norm(tfs, dls, avgdl))
                 docs_out.extend(doc_ids.tolist())
                 part_out.extend(w.tolist())
                 term_out.extend([term] * len(doc_ids))
@@ -109,7 +95,6 @@ def _score_chunks(
     """(doc_id, score, n_hit) for the given segment rows (must carry a
     ``residual`` column for block-level pruning; pass residual=inf to
     disable)."""
-    spark = segs.sparkSession
     partials = segs.select(
         "term",
         "block_max_weight",
@@ -122,6 +107,28 @@ def _score_chunks(
         F.sum("partial").alias("score"),
         F.count_distinct("term").alias("n_hit"),
     )
+
+
+def _chunk_bounds(
+    segs: DataFrame, idfs: dict[str, float], mode: str, n_terms: int
+) -> tuple[DataFrame, DataFrame]:
+    """(per_term, chunk_meta) from the metadata columns alone: each
+    (chunk, term)'s best block bound ``tub``, and per chunk the sum of
+    those, ``chunk_ub`` (conjunctive mode keeps only chunks holding every
+    term)."""
+    idf_col = F.create_map(
+        *[x for t, v in idfs.items() for x in (F.lit(t), F.lit(v))]
+    )[F.col("term")]
+    per_term = segs.groupBy("chunk", "term").agg(
+        F.max(bm25.weight(idf_col, F.col("block_max_weight"))).alias("tub")
+    )
+    chunk_meta = per_term.groupBy("chunk").agg(
+        F.sum("tub").alias("chunk_ub"),
+        F.count(F.lit(1)).alias("n_terms_present"),
+    )
+    if mode == "conjunctive":
+        chunk_meta = chunk_meta.where(F.col("n_terms_present") == n_terms)
+    return per_term, chunk_meta
 
 
 def bm25_topk_segments(
@@ -158,14 +165,15 @@ def bm25_topk_segments(
     count is <= ``prune_min_chunks``, scoring everything in ONE pass is
     strictly cheaper and the prune is skipped; results are identical by
     the pruned == unpruned invariant.  At web scale hot terms have
-    thousands of chunks and the threshold never triggers."""
+    thousands of chunks and the threshold never triggers.  The single
+    pass builds no chunk bounds: term filter, decode kernel, one
+    aggregation, top-k."""
     terms = sorted(set(query_terms))
     segs = segments.where(F.col("term").isin(terms))
     if prune and term_chunks is not None:
         if sum(term_chunks.get(t, 0) for t in terms) <= prune_min_chunks:
             prune = False
 
-    # --- metadata pass (Parquet reads only the narrow columns) ---
     if term_df is not None:
         term_df = {t: term_df[t] for t in terms if term_df.get(t, 0) > 0}
         # a stale stats map may lack a term whose segments exist (e.g. a
@@ -174,6 +182,7 @@ def bm25_topk_segments(
         # a term without an idf entry
         segs = segs.where(F.col("term").isin(list(term_df)))
     else:
+        # metadata pass (Parquet reads only the narrow columns)
         term_df = {
             r.term: r.df
             for r in segs.groupBy("term")
@@ -184,34 +193,7 @@ def bm25_topk_segments(
         return segments.sparkSession.createDataFrame(
             [], "doc_id long, score double"
         )
-    idfs = _idf_map(term_df, num_docs)
-    idf_df = F.create_map(
-        *[x for t in term_df for x in (F.lit(t), F.lit(idfs[t]))]
-    )
-    meta = segs.select(
-        "term",
-        "chunk",
-        (
-            idf_df[F.col("term")]
-            * F.lit(BM25_K1 + 1.0)
-            * F.col("block_max_weight")
-        ).alias("ub"),
-    )
-    per_term = meta.groupBy("chunk", "term").agg(F.max("ub").alias("tub"))
-    chunk_meta = per_term.groupBy("chunk").agg(
-        F.sum("tub").alias("chunk_ub"),
-        F.count(F.lit(1)).alias("n_terms_present"),
-    )
-    if mode == "conjunctive":
-        chunk_meta = chunk_meta.where(
-            F.col("n_terms_present") == len(terms)
-        )
-
-    # residual per (chunk, term) = chunk_ub - that term's chunk max
-    residual = per_term.join(chunk_meta.select("chunk", "chunk_ub"), "chunk").select(
-        "chunk", "term", (F.col("chunk_ub") - F.col("tub")).alias("residual")
-    )
-    segs_r = segs.join(residual, ["chunk", "term"])
+    idfs = {t: bm25.idf(df, num_docs) for t, df in term_df.items()}
 
     def _materialize(df: DataFrame) -> DataFrame:
         rows = df.collect()
@@ -219,19 +201,26 @@ def bm25_topk_segments(
 
     if not prune:
         scored = _score_chunks(
-            segs_r.withColumn("residual", F.lit(float("inf"))),
+            segs.withColumn("residual", F.lit(float("inf"))),
             idfs,
             avgdl,
             float("-inf"),
         )
         if stats is not None:
-            n_chunks = chunk_meta.count()
+            n_chunks = _chunk_bounds(segs, idfs, mode, len(terms))[1].count()
             stats.update(
                 n_chunks=n_chunks, probed=n_chunks, survivors=0,
                 theta=float("-inf"),
             )
         out = _finalize(scored, mode, len(terms), k)
         return _materialize(out) if eager else out
+
+    per_term, chunk_meta = _chunk_bounds(segs, idfs, mode, len(terms))
+    # residual per (chunk, term) = chunk_ub - that term's chunk max
+    residual = per_term.join(chunk_meta.select("chunk", "chunk_ub"), "chunk").select(
+        "chunk", "term", (F.col("chunk_ub") - F.col("tub")).alias("residual")
+    )
+    segs_r = segs.join(residual, ["chunk", "term"])
 
     # --- probe: exact scores for the top-ub chunks -> theta ---
     # TakeOrderedAndProject keeps the selection distributed; the driver

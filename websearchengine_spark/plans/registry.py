@@ -25,7 +25,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# shared constants — keep the SQL strings and Spark exprs in lockstep
+from websearchengine_spark.operators import score
+
+# shared constants — keep the SQL strings and Spark exprs in lockstep.  The
+# BM25 pair feeds only the oracle SQL, an independent copy on purpose: the
+# Spark side scores through the engine's ``functions.bm25``.
 BM25_K1 = 1.2
 BM25_B = 0.75
 QL_BETA = 0.5
@@ -198,45 +202,17 @@ FROM postings WHERE term IN ({_dterms_sql}) GROUP BY doc_id"""
 
 def q_bm25_topk(spark, sf_dir):
     """R1-slot headline: BM25 (k1=1.2, b=0.75, Lucene idf) conjunctive
-    top-10; ordered by rounded score then doc_id on both sides."""
+    top-10 through the engine's ``score.bm25_scores``; ordered by rounded
+    score then doc_id on both sides."""
     p = _postings(spark, sf_dir).where(F.col("term").isin(QUERY_TERMS))
     dl = _doclen(spark, sf_dir)
     docs_n = _docs(spark, sf_dir).count()
-    total_terms, num_docs_tok = (
-        _tok(spark, sf_dir)
-        .agg(F.count(F.lit(1)), F.count_distinct("doc_id"))
-        .head()
+    avgdl = _tok(spark, sf_dir).count() / docs_n
+    tp = p.join(dl, "doc_id").select(
+        F.col("term").alias("token"), "doc_id", "tf", F.col("doc_len").alias("dl")
     )
-    avgdl = total_terms / docs_n
-    ts = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(docs_n)) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
-    w = (
-        idf
-        * F.col("tf")
-        * F.lit(BM25_K1 + 1.0)
-        / (
-            F.col("tf")
-            + F.lit(BM25_K1)
-            * (
-                F.lit(1.0 - BM25_B)
-                + F.lit(BM25_B) * F.col("doc_len") / F.lit(float(avgdl))
-            )
-        )
-    )
-    scored = (
-        p.join(dl, "doc_id")
-        .join(F.broadcast(ts), "term")
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum(w), 6).alias("score"),
-            F.count_distinct("term").alias("n_hit"),
-        )
-        .where(F.col("n_hit") == len(QUERY_TERMS))
-        .select("doc_id", "score")
+    scored = score.bm25_scores(tp, QUERY_TERMS, docs_n, avgdl).select(
+        "doc_id", F.round("score", 6).alias("score")
     )
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
 

@@ -6,9 +6,12 @@ parses CGI args ``query``/``ranker``/``num``/``format``, ignoring invalid
 values).  This module is the Spark analogue: a resident ``IndexServer``
 holds one SparkSession with the compressed segment table cached and the
 term-stats sidecar loaded into the in-memory ``{term: df}`` map (the
-reference's in-memory serve maps, IndexerInvertedCompressed serve mode),
-so each query is one zero-join Spark job through the WAND fast path; a
-stdlib ``http.server`` front end exposes ``GET /search``.
+reference's in-memory serve maps, IndexerInvertedCompressed serve mode).
+A word query runs WAND's single pass (or, past its chunk threshold, the
+probe/theta prune) and a phrase query the chunk-pruned positional path;
+either yields at most k ranked rows, whose titles are read with an
+``isin`` over just those ids and ordered on the driver.  A stdlib
+``http.server`` front end exposes ``GET /search``.
 
 Output format: the hw1 result line ``query\tdocid\ttitle\tscore``
 (hw1 ScoredDocument asString — the reference project's own asTextResult
@@ -28,6 +31,7 @@ from __future__ import annotations
 
 import html as _html
 import json
+import logging
 import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -36,26 +40,23 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import functions as F
 
 
+# Per-query latency at serve scale is dominated by task count, not data: a
+# measured A/B on sf0.1 at local[32] cut BM25 p50 from ~1.1 s (64 cached
+# partitions, 32 shuffle partitions) to ~0.24 s (4/4).  The resident server
+# therefore coalesces its cached segment table and pins the session's
+# shuffle partitions to this small count, sized to the serve working set
+# (a few fat tasks), not the cluster: a latency-serving session is a
+# separate concern from throughput builds, as the reference splits serve
+# mode from index mode.
+SERVE_PARTITIONS = 8
+
+
 class IndexServer:
-    """Resident query service over a checkpointed index directory.
+    """Resident query service over a checkpointed index directory
+    (``preload_stats=True``) or a one-shot batch reader over it
+    (``preload_stats=False``)."""
 
-    ``serve_partitions`` (resident mode only): per-query latency at serve
-    scale is dominated by task count, not data — a measured A/B on sf0.1
-    at local[32] cut BM25 p50 from ~1.1 s (64 cached partitions, 32
-    shuffle partitions) to ~0.24 s (4/4) — so the resident server
-    coalesces its cached segment table and pins the session's shuffle
-    partitions to a small count.  Size it to the serve working set (a few
-    fat tasks), NOT the cluster: a latency-serving session is a separate
-    concern from throughput builds, exactly as the reference splits serve
-    mode from index mode."""
-
-    def __init__(
-        self,
-        spark,
-        index_dir: str,
-        preload_stats: bool = True,
-        serve_partitions: int | None = 8,
-    ):
+    def __init__(self, spark, index_dir: str, preload_stats: bool = True):
         from websearchengine_spark.operators import checkpoint
 
         self.spark = spark
@@ -73,22 +74,20 @@ class IndexServer:
         if preload_stats:
             # serve-latency tuning applies in resident mode regardless of
             # whether the stats sidecar exists — an index built without it
-            # still wants cached, coalesced segments
-            if serve_partitions:
-                # segment cache keeps 2x width: the WAND decode pass is
-                # CPU-bound Python and wants parallelism, while shuffle
-                # stages want few fat tasks (measured A/B in BASELINE.md)
-                self.segs = self.segs.coalesce(serve_partitions * 2)
-                # session-global conf: remember the prior value so
-                # close() restores it — a batch job sharing this session
-                # must not inherit the narrow serve width
-                self._prev_shuffle_partitions = spark.conf.get(
-                    "spark.sql.shuffle.partitions", None
-                )
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(serve_partitions)
-                )
-            self.segs = self.segs.cache()
+            # still wants cached, coalesced segments.  The segment cache
+            # keeps 2x width: the WAND decode pass is CPU-bound Python and
+            # wants parallelism, while shuffle stages want few fat tasks
+            # (measured A/B in BASELINE.md)
+            self.segs = self.segs.coalesce(SERVE_PARTITIONS * 2).cache()
+            # session-global conf: remember the prior value so close()
+            # restores it — a batch job sharing this session must not
+            # inherit the narrow serve width
+            self._prev_shuffle_partitions = spark.conf.get(
+                "spark.sql.shuffle.partitions", None
+            )
+            spark.conf.set(
+                "spark.sql.shuffle.partitions", str(SERVE_PARTITIONS)
+            )
             if os.path.exists(self._stats_path):
                 stats_df = spark.read.parquet(self._stats_path)
                 rows = stats_df.collect()
@@ -140,8 +139,9 @@ class IndexServer:
     def query(
         self, q: str, k: int = 10, mode: str = "conjunctive"
     ) -> list[tuple[int, str, float]]:
-        """[(doc_id, title, score)] best-first — WAND fast path for word
-        queries, chunk-pruned positional path for phrases."""
+        """[(doc_id, title, score)] best-first — WAND for word queries,
+        the chunk-pruned positional path for phrases; titles are read for
+        the <= k ranked ids only."""
         from websearchengine_spark.operators import query as Q
         from websearchengine_spark.operators import score, wand
 
@@ -181,17 +181,21 @@ class IndexServer:
                 eager=True,
                 term_chunks=term_chunks,
             )
-        if self.titles is not None:
-            out = out.join(F.broadcast(self.titles), "doc_id", "left").select(
-                "doc_id",
-                F.coalesce("title", F.lit("")).alias("title"),
-                "score",
-            )
-        else:
-            out = out.select("doc_id", F.lit("").alias("title"), "score")
-        rows = out.orderBy(F.desc("score"), F.asc("doc_id")).collect()
-        return [(int(r.doc_id), r.title, float(r.score)) for r in rows]
-
+        ranked = out.collect()
+        titles = {}
+        if ranked and self.titles is not None:
+            ids = [r.doc_id for r in ranked]
+            titles = {
+                r.doc_id: r.title
+                for r in self.titles.where(F.col("doc_id").isin(ids))
+                .select("doc_id", "title")
+                .collect()
+            }
+        ranked.sort(key=lambda r: (-r.score, r.doc_id))
+        return [
+            (int(r.doc_id), titles.get(r.doc_id) or "", float(r.score))
+            for r in ranked
+        ]
 
     def prf(
         self, q: str, num_docs: int = 10, num_terms: int = 10
@@ -222,19 +226,35 @@ class IndexServer:
         return [(r.term, float(r.prob)) for r in rows]
 
 
+_log = logging.getLogger(__name__)
 _RANKERS = {"conjunctive", "disjunctive"}
+_INT_MAX = (1 << 31) - 1  # Spark's limit() takes a 32-bit int
+
+
+def _count_arg(value: str, default: int, cap: int) -> int:
+    """A CGI count argument: a positive integer, capped at ``cap``;
+    anything else is ignored in favour of ``default``, like every other
+    invalid CGI value (QueryHandler.java:85-128)."""
+    try:
+        n = int(value)
+    except ValueError:
+        return default
+    return min(n, cap) if n > 0 else default
 
 
 def make_handler(server: IndexServer, ads_state=None):
     """BaseHTTPRequestHandler bound to one IndexServer — CGI-arg semantics
     per QueryHandler.java:85-128: unknown/invalid values are ignored, the
-    engine never fails on user input.  With an ``ads_state``
+    engine never fails on user input, and a 500 reply carries a fixed
+    message, never the exception's text.  ``num`` and ``numdocs`` are
+    capped at the index's document count.  With an ``ads_state``
     (ads_serving.AdsState) the reference's ads routes are served too:
     ``/ads/create``, ``/ads/bid``, ``/ads/search`` and the click
     callback ``/search/ads`` (QueryHandler.java:297-408; the reference's
     CGI arg names are kept, including the ``compamyID`` typo)."""
 
     _ads_routes = ("/ads/create", "/ads/bid", "/ads/search", "/search/ads")
+    max_docs = max(1, int(server.stats["num_docs"]))
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802 (stdlib API name)
@@ -256,25 +276,23 @@ def make_handler(server: IndexServer, ads_state=None):
             if u.path in _ads_routes:
                 try:
                     self._handle_ads(u.path, first)
-                except Exception as e:  # never fail on user input
-                    self._respond(500, "text/plain", f"ads failed: {e}")
+                except Exception:  # never fail on user input
+                    _log.exception("ads request failed: %s", self.path)
+                    self._respond(500, "text/plain", "ads failed")
                 return
             if u.path == "/prf":
                 # reference /prf: numdocs/numterms CGI args, lines of
                 # term \t prob sorted by prob desc
                 # (QueryHandler.java:565-583)
-                def num(key, default):
-                    try:
-                        return int(first(key, str(default)))
-                    except ValueError:
-                        return default
-
                 try:
                     rep = server.prf(
-                        q, num("numdocs", 10), num("numterms", 10)
+                        q,
+                        _count_arg(first("numdocs"), 10, max_docs),
+                        _count_arg(first("numterms"), 10, _INT_MAX),
                     )
-                except Exception as e:
-                    self._respond(500, "text/plain", f"prf failed: {e}")
+                except Exception:
+                    _log.exception("prf request failed: %s", self.path)
+                    self._respond(500, "text/plain", "prf failed")
                     return
                 body = "".join(f"{t}\t{p}\n" for t, p in rep)
                 self._respond(200, "text/plain", body)
@@ -282,15 +300,13 @@ def make_handler(server: IndexServer, ads_state=None):
             mode = first("ranker", "conjunctive").lower()
             if mode not in _RANKERS:
                 mode = "conjunctive"  # invalid ranker ignored
-            try:
-                k = int(first("num", "10"))
-            except ValueError:
-                k = 10  # invalid num ignored
+            k = _count_arg(first("num"), 10, max_docs)
             fmt = first("format", "text").lower()
             try:
                 results = server.query(q, k=k, mode=mode)
-            except Exception as e:  # never fail on user input
-                self._respond(500, "text/plain", f"query failed: {e}")
+            except Exception:  # never fail on user input
+                _log.exception("search request failed: %s", self.path)
+                self._respond(500, "text/plain", "query failed")
                 return
             if fmt == "html":
                 items = "".join(

@@ -239,20 +239,24 @@ class _RecordReader:
         return out
 
     def read_exact(self, n: int) -> bytes:
-        """Payloads can be huge (Common Crawl records run to hundreds of
-        MB decompressed), so the remainder past the buffered prefix is
-        read in one call straight from the source — NOT accumulated via
-        repeated ``+=`` fills, which would be O(n^2/CHUNK) in the record
-        size (measured 19x blowup from 20 MB to 40 MB records)."""
-        if len(self._buf) < n:
-            rest = self._fh.read(n - len(self._buf))
-            out = self._buf + (rest or b"")
-            self._buf = b""
-        else:
-            out = self._buf[:n]
-            self._buf = self._buf[n:]
-        self.offset += min(len(out), n)
-        return out[:n]
+        """Up to ``n`` bytes, fewer only at end of stream.  Payloads can
+        be huge (Common Crawl records run to hundreds of MB decompressed),
+        so the remainder past the buffered prefix is read straight from
+        the source and joined once — NOT accumulated via repeated ``+=``
+        fills, which would be O(n^2/CHUNK) in the record size (measured
+        19x blowup from 20 MB to 40 MB records).  A source may return
+        short reads, so it is read until ``n`` bytes or an empty read."""
+        parts = [self._buf[:n]]
+        self._buf = self._buf[n:]
+        have = len(parts[0])
+        while have < n:
+            chunk = self._fh.read(n - have)
+            if not chunk:
+                break
+            parts.append(chunk)
+            have += len(chunk)
+        self.offset += have
+        return b"".join(parts)
 
     def peek(self, n: int) -> bytes:
         while len(self._buf) < n:
