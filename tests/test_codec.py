@@ -45,6 +45,41 @@ class TestDelta:
 
 
 class TestBlock:
+    def test_block_roundtrip_with_positions(self):
+        """One block through the codec calls build_segments makes (delta
+        restarting per block for doc ids, per posting for positions) and
+        back through the ones decode_segments makes."""
+        doc_ids = np.array([3, 10, 11, 4000], dtype=np.int64)
+        positions = [
+            np.array([0, 5, 9]),
+            np.array([2]),
+            np.array([1, 2, 3, 4]),
+            np.array([100, 10000]),
+        ]
+        tfs = np.array([len(p) for p in positions], dtype=np.int64)
+        blk = np.array([0])
+        (gap_bytes,) = codec.encode_varints_segmented(
+            codec.delta_encode_segmented(doc_ids, blk), [doc_ids.size]
+        )
+        (tf_bytes,) = codec.encode_varints_segmented(tfs, [tfs.size])
+        posting_starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
+        (pos_bytes,) = codec.encode_varints_segmented(
+            codec.delta_encode_segmented(
+                np.concatenate(positions), posting_starts
+            ),
+            [int(tfs.sum())],
+        )
+        d = codec.delta_decode(codec.decode_varints(gap_bytes))
+        t = codec.decode_varints(tf_bytes)
+        p = codec.decode_positions(pos_bytes, t)
+        assert d.tolist() == doc_ids.tolist()
+        assert t.tolist() == tfs.tolist()
+        for a, b in zip(p, positions):
+            assert a.tolist() == b.tolist()
+        assert np.maximum.reduceat(t, blk).tolist() == [4]
+        assert np.add.reduceat(t, blk).tolist() == [10]
+        assert d[0] == 3 and d[-1] == 4000
+
     def test_compression_is_real(self):
         # a dense doc-id block: gaps of 1 -> 1 byte each (8 raw)
         doc_ids = np.arange(10_000, 20_000, dtype=np.int64)
