@@ -142,6 +142,23 @@ def test_http_prf_route(spark, http_index):
         httpd.shutdown()
 
 
+def _ads_seed(tmp_path):
+    """The shipped ad corpus where it exists, else a two-ad seed whose ads
+    mention the bid words (data, widget) but hold no bid, so neither may
+    ever win an auction."""
+    from websearchengine_spark.operators import ads as A
+
+    if os.path.exists(A.ADS_TSV):
+        return A.ADS_TSV
+    path = tmp_path / "seed_ads.tsv"
+    path.write_text(
+        "seedco_1\tdata news\tdata widget review\n"
+        "seedco_2\twidget shop\twidget data deals\n",
+        encoding="utf-8",
+    )
+    return str(path)
+
+
 def test_http_ads_click_roundtrip(spark, http_index, tmp_path):
     """/ads/* routes (QueryHandler.java:297-408): create -> bid ->
     auction -> click -> CTR fold.  The live serve-side CTR state must be
@@ -156,7 +173,7 @@ def test_http_ads_click_roundtrip(spark, http_index, tmp_path):
     from websearchengine_spark.serving import IndexServer, serve
 
     ads_dir = str(tmp_path / "ads_state")
-    state = AdsState(spark, ads_dir)
+    state = AdsState(spark, ads_dir, seed_tsv=_ads_seed(tmp_path))
     srv = IndexServer(spark, http_index, preload_stats=True)
     httpd = serve(srv, port=0, background=True, ads_state=state)
     try:
@@ -243,7 +260,7 @@ def test_ads_state_resumes_from_disk(spark, tmp_path):
     from websearchengine_spark.ads_serving import AdsState
 
     ads_dir = str(tmp_path / "ads_resume")
-    s1 = AdsState(spark, ads_dir)
+    s1 = AdsState(spark, ads_dir, seed_tsv=_ads_seed(tmp_path))
     s1.create_ad("zeta", "9", "widget sale", "widget widget")
     s1.place_bid("widget", "zeta", "9", 4.0)
     s2 = AdsState(spark, ads_dir)

@@ -25,6 +25,11 @@ from websearchengine_spark.functions import textnorm as tn
 SIMPLE_DIR = "/root/reference/project/data/simple"
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens", "simple_extract")
 
+needs_simple_pages = pytest.mark.skipif(
+    not os.path.isdir(SIMPLE_DIR),
+    reason=f"needs the reference's crawled pages at {SIMPLE_DIR}",
+)
+
 PAGES = sorted(
     os.path.basename(p)[: -len(".text")]
     for p in glob.glob(os.path.join(GOLDEN_DIR, "*.text"))
@@ -43,16 +48,19 @@ def _golden(name: str, kind: str) -> str:
         return fh.read()
 
 
+@needs_simple_pages
 def test_golden_set_is_the_full_shipped_corpus():
     assert len(PAGES) == 9  # 8 pages + the Web_2.0 redirect stub
     assert sorted(os.listdir(SIMPLE_DIR)) == PAGES
 
 
+@needs_simple_pages
 @pytest.mark.parametrize("name", PAGES)
 def test_extract_text_byte_identical_to_jsoup(name):
     assert tn.extract_text(_raw(name)) == _golden(name, "text")
 
 
+@needs_simple_pages
 @pytest.mark.parametrize("name", PAGES)
 def test_indexing_body_byte_identical(name):
     """title-boilerplate strip + [^a-zA-Z0-9]->space on the extracted text
@@ -61,6 +69,7 @@ def test_indexing_body_byte_identical(name):
     assert tn.body_for_indexing(name, text) == _golden(name, "body")
 
 
+@needs_simple_pages
 def test_spark_index_over_real_pages(spark):
     """End-to-end: index the 8 real pages through the Spark pipeline and
     assert postings parity with the pure-Python oracle over the same
