@@ -3,6 +3,8 @@ compaction tests — north_star gates."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -67,6 +69,21 @@ def test_kill_and_resume(spark, corpus_ids, single_shot, tmp_path):
     # seq numbers are contiguous across the restart
     seqs = sorted(p.seq for p in cp2.lineage())
     assert seqs == list(range(len(seqs)))
+
+
+def test_part_directory_is_flat(spark, corpus_ids, tmp_path):
+    """A committed part is one directory of term-sorted parquet files:
+    no sub-partition directories, and the read-back table is the segment
+    schema plus the ``part`` key."""
+    out = tmp_path / "flat"
+    cp = checkpoint.IndexCheckpointer(str(out), docs_per_part=32, chunk_docs=16)
+    cp.build(corpus_ids, avgdl=100.0)
+    for part in cp.committed_parts():
+        entries = os.listdir(out / "segments" / f"part={part}")
+        assert entries and not [e for e in entries if e.startswith("bucket=")]
+    assert cp.segments(spark).columns == (
+        indexer.SEGMENT_SCHEMA.fieldNames() + ["part"]
+    )
 
 
 def test_misaligned_chunk_rejected(tmp_path):

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -393,6 +395,60 @@ def test_build_from_warc_matches_parquet(spark, corpus_dir, tmp_path, capsys):
         cli.main(["query", "--index", idx, "--q", "web search", "--k", "5"])
         outs.append(capsys.readouterr().out.strip())
     assert outs[0] == outs[1] and outs[0]
+
+
+def test_merge_unions_the_committed_parts_of_two_builds(
+    spark, corpus_dir, tmp_path, capsys
+):
+    """`cli merge` over two `cli build` outputs: the merged segments decode
+    to the multiset union of both inputs' committed postings; a part
+    directory the manifest never committed (a crash mid-write) stays out;
+    re-encoded groups keep the inputs' chunk width, so every block lies in
+    its chunk and no (term, chunk, block_seq) key repeats."""
+    from websearchengine_spark.operators import checkpoint, indexer
+
+    corpus = spark.read.parquet(corpus_dir)
+    half = F.pmod(F.xxhash64("url"), F.lit(2))
+    builds = []
+    for i in (0, 1):
+        src = str(tmp_path / f"corpus{i}")
+        corpus.where(half == i).write.parquet(src)
+        out = str(tmp_path / f"idx{i}")
+        cli.main(["build", "--corpus", src, "--out", out,
+                  "--docs-per-part", "16"])
+        builds.append(out)
+    base, delta = builds
+    shutil.copytree(
+        os.path.join(delta, "segments", "part=0"),
+        os.path.join(delta, "segments", "part=7"),
+    )
+    with open(os.path.join(base, "stats.json")) as f:
+        avgdl = json.load(f)["avgdl"]
+    capsys.readouterr()
+
+    merged_dir = str(tmp_path / "merged")
+    cli.main(["merge", "--base", base, "--delta", delta, "--out",
+              merged_dir, "--avgdl", str(avgdl)])
+    merged = spark.read.parquet(os.path.join(merged_dir, "segments"))
+
+    def postings(segs):
+        return Counter(
+            tuple(r)
+            for r in indexer.decode_segments(segs)
+            .select("term", "doc_id", "tf")
+            .collect()
+        )
+
+    want = Counter()
+    for d in builds:
+        want += postings(checkpoint.IndexCheckpointer(d).segments(spark))
+    assert postings(merged) == want and want
+    keys = merged.select("term", "chunk", "block_seq", "first_doc_id",
+                         "last_doc_id").collect()
+    assert len({(r.term, r.chunk, r.block_seq) for r in keys}) == len(keys)
+    assert all(
+        r.first_doc_id // 16 == r.chunk == r.last_doc_id // 16 for r in keys
+    )
 
 
 def test_pipeline_end_to_end(spark, corpus_dir, tmp_path, capsys):

@@ -171,33 +171,3 @@ class TestQLParity:
         assert [r.doc_id for r in got] == [d for d, _ in want]
         for r, (_, s) in zip(got, want):
             assert r.score == pytest.approx(s, rel=1e-9)
-
-
-class TestBytesModePostings:
-    def test_segments_identical_both_position_modes(self, spark_index):
-        """Map-side varint position encoding (shuffle-bytes path) must
-        produce byte-identical segments to the array path."""
-        cols = [
-            "term", "chunk", "block_seq", "n_docs", "first_doc_id",
-            "last_doc_id", "doc_gap_bytes", "tf_bytes", "dl_bytes",
-            "pos_bytes", "block_max_tf", "sum_tf",
-        ]
-        from websearchengine_spark.sources import fixture
-
-        spark = spark_index["postings"].sparkSession
-        ids = spark_index["corpus_ids"]
-        a = sorted(
-            tuple(r)
-            for r in indexer.build_segments(
-                indexer.build_postings(ids),
-                avgdl=100.0, chunk_docs=16,
-            ).select(*cols).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in indexer.build_segments(
-                indexer.build_postings(ids, positions_as="bytes"),
-                avgdl=100.0, chunk_docs=16,
-            ).select(*cols).collect()
-        )
-        assert a == b and len(a) > 0

@@ -265,3 +265,15 @@ def test_phrase_cost_based_prune_skip(spark, spark_index, seg_index):
     # the skipped plan dropped the prune's semi-join; the forced plan kept it
     assert "LeftSemi" not in plan_skip
     assert "LeftSemi" in plan_prune and "LeftSemi" in plan_default
+
+
+def test_finalize_breaks_near_ties_by_doc_id(spark):
+    """Scores equal up to summation order (last-bit differences) rank by
+    doc_id, as the oracle ranks exact ties; the score itself is kept
+    unrounded."""
+    scored = spark.createDataFrame(
+        [(5, 0.6000000000000001, 1), (3, 0.6, 1)],
+        "doc_id long, score double, n_hit int",
+    )
+    got = wand._finalize(scored, "disjunctive", 1, 1).collect()
+    assert [(r.doc_id, r.score) for r in got] == [(3, 0.6)]

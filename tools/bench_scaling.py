@@ -111,13 +111,13 @@ def measure(
     # warmup: same pipeline on a slice — spawns/reuses the Python workers
     warm = corpus.limit(4000).repartition(cpus)
     indexer.build_segments(
-        indexer.build_postings(warm, positions_as="bytes"),
+        indexer.build_postings(warm),
         avgdl=150.0,
         chunk_docs=chunk_docs,
     ).count()
 
     t0 = time.time()
-    postings = indexer.build_postings(corpus, positions_as="bytes")
+    postings = indexer.build_postings(corpus)
     segs = indexer.build_segments(postings, avgdl=150.0, chunk_docs=chunk_docs)
     n_segments = segs.count()
     sec = time.time() - t0

@@ -2,8 +2,9 @@
 """Print `.explain("formatted")` for the engine's key physical plans, to
 verify the properties the scale design depends on:
 
-- term filters reach the parquet scan (PushedFilters) and prune term-hash
-  bucket partitions on a stored segment table;
+- term filters reach the parquet scan of a stored segment part
+  (PushedFilters), where min/max row-group statistics on the term-sorted
+  files can skip row groups;
 - column pruning (ReadSchema) keeps metadata-only passes off the posting
   byte columns;
 - scoring joins broadcast the tiny side (BroadcastHashJoin, no shuffle of
@@ -42,21 +43,21 @@ def main() -> None:
     avgdl = 150.0
 
     with tempfile.TemporaryDirectory() as td:
+        # the layout `cli build` commits: one flat directory per part
         seg_path = os.path.join(td, "segments")
-        indexer.with_term_bucket(
-            indexer.build_segments(postings, avgdl=avgdl)
-        ).write.partitionBy("bucket").parquet(seg_path)
+        indexer.build_segments(postings, avgdl=avgdl).write.parquet(
+            os.path.join(seg_path, "part=0")
+        )
         segs = spark.read.parquet(seg_path)
 
         print("=" * 72)
-        print("1. Stored-segment scan pruned by term + bucket")
-        print("   (expect PushedFilters on term, PartitionFilters on bucket,")
-        print("   ReadSchema WITHOUT the posting byte columns)")
+        print("1. Stored-segment scan filtered by term")
+        print("   (expect PushedFilters on term and a ReadSchema WITHOUT")
+        print("   the posting byte columns)")
         print("=" * 72)
-        b = indexer.term_bucket_of("data", spark)
-        meta_scan = segs.where(
-            (F.col("bucket") == b) & (F.col("term") == "data")
-        ).select("term", "chunk", "block_max_weight", "n_docs")
+        meta_scan = segs.where(F.col("term") == "data").select(
+            "term", "chunk", "block_max_weight", "n_docs"
+        )
         meta_scan.explain("formatted")
 
         print("=" * 72)

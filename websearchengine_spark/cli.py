@@ -301,12 +301,27 @@ def cmd_serve(args) -> None:
 
 
 def cmd_merge(args) -> None:
-    from websearchengine_spark.operators import merge
+    from websearchengine_spark.operators import checkpoint, merge
 
     spark = _spark(args.cpus)
-    base = spark.read.parquet(os.path.join(args.base, "segments"))
-    delta = spark.read.parquet(os.path.join(args.delta, "segments"))
-    merged = merge.merge_segments(base, delta, avgdl=args.avgdl)
+    # committed parts only, at the chunk width each input was built with
+    cps = []
+    for index_dir in (args.base, args.delta):
+        with open(os.path.join(index_dir, "stats.json")) as f:
+            dpp = json.load(f)["docs_per_part"]
+        cps.append(checkpoint.IndexCheckpointer(index_dir, docs_per_part=dpp))
+    base, delta = cps
+    if base.chunk_docs != delta.chunk_docs:
+        raise SystemExit(
+            f"cannot merge: chunk widths differ ({base.chunk_docs} vs "
+            f"{delta.chunk_docs})"
+        )
+    merged = merge.merge_segments(
+        base.segments(spark),
+        delta.segments(spark),
+        avgdl=args.avgdl,
+        chunk_docs=base.chunk_docs,
+    )
     merged.write.mode("overwrite").parquet(os.path.join(args.out, "segments"))
     print(json.dumps({"segments": merged.count(), "out": args.out}))
 

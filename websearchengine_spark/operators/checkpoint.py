@@ -11,8 +11,11 @@ Design
   doc_ids are deterministic (indexer.assign_doc_ids), so partition membership
   is stable across restarts and cluster sizes.
 - Each partition is one bounded Spark job: tokenize -> map-side postings ->
-  compressed segments -> parquet under ``out/segments/part=<id>/bucket=<b>/``
-  (term-hash bucket sub-partitioning gives query-term scan pruning).
+  compressed segments -> parquet files directly under
+  ``out/segments/part=<id>/``.  Rows in each file are sorted by
+  ``(term, chunk, block_seq)``, so a pushed ``term`` filter skips the row
+  groups whose min/max ``term`` statistics exclude it.  A file holds a
+  hash share of all terms, so a one-row-group file is never skipped.
 - ``docs_per_part`` must be a multiple of the segment ``chunk_docs`` so the
   (term, chunk) groups of a partition never straddle partitions — the
   incremental output is then byte-identical to a single-shot build
@@ -158,9 +161,8 @@ class IndexCheckpointer:
             chunk_docs=self.chunk_docs,
             block_docs=self.block_docs,
         )
-        segs = indexer.with_term_bucket(segs)
         path = os.path.join(self.out_dir, "segments", f"part={part}")
-        segs.write.mode("overwrite").partitionBy("bucket").parquet(path)
+        segs.write.mode("overwrite").parquet(path)
 
         # lineage metrics from what was written (one scan of the small
         # segment table, not the corpus)
@@ -216,5 +218,6 @@ class IndexCheckpointer:
         ]
         if not paths:
             raise ValueError("no committed partitions")
-        df = spark.read.option("basePath", os.path.join(self.out_dir, "segments")).parquet(*paths)
-        return df
+        return spark.read.option(
+            "basePath", os.path.join(self.out_dir, "segments")
+        ).parquet(*paths)

@@ -39,7 +39,6 @@ from websearchengine_spark.functions import bm25, codec
 from websearchengine_spark.functions.textnorm import tokenize_document
 
 DEFAULT_CHUNK_DOCS = 1 << 16  # salt-range width for segment grouping
-N_TERM_BUCKETS = 64  # storage partition: bucket(term) for scan pruning
 
 
 # --------------------------------------------------------------------------
@@ -123,36 +122,14 @@ POSTING_SCHEMA = T.StructType(
     ]
 )
 
-POSTING_BYTES_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("tf", T.IntegerType(), False),
-        T.StructField("pos_bytes", T.BinaryType(), False),
-        T.StructField("dl", T.IntegerType(), False),
-    ]
-)
 
-
-def build_postings(
-    corpus_with_ids: DataFrame, positions_as: str = "array"
-) -> DataFrame:
-    """(url, text, doc_id) -> postings(term, doc_id, tf, positions|pos_bytes, dl).
+def build_postings(corpus_with_ids: DataFrame) -> DataFrame:
+    """(url, text, doc_id) -> postings(term, doc_id, tf, positions, dl).
 
     The per-(term,doc) aggregation happens inside the Arrow UDF (document
     locality), so this stage is shuffle-free; ``dl`` (kept-token doc length,
     IndexerInvertedCompressed.java:178) rides along so downstream scoring
-    never needs a doc-side join.
-
-    ``positions_as="bytes"`` applies the delta-gap + varint position codec
-    MAP-SIDE (A8), so the segment shuffle moves compact binary instead of
-    Arrow int lists — at scale the positions dominate shuffle bytes, and
-    per-doc varint streams concatenate into the segment payload without
-    re-encoding (varint framing is per-value, so
-    ``concat(encode(doc_i gaps))`` == ``encode(concat(doc gaps))``)."""
-    as_bytes = positions_as == "bytes"
-    import numpy as np
-
+    never needs a doc-side join."""
     MEMO_CAP = 1 << 20  # bound the per-task cache on high-cardinality text
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -161,7 +138,6 @@ def build_postings(
             if len(memo) > MEMO_CAP:
                 memo.clear()
             terms, dids, tfs, poss, dls = [], [], [], [], []
-            flat_pos: list[int] = []  # bytes mode: all positions, in order
             for url, text, did in zip(b["url"], b["text"], b["doc_id"]):
                 toks = tokenize_document(url, text, memo)
                 dl = len(toks)
@@ -172,57 +148,21 @@ def build_postings(
                     terms.append(t)
                     dids.append(did)
                     tfs.append(len(plist))
-                    if as_bytes:
-                        flat_pos.extend(plist)
-                    else:
-                        poss.append(plist)
+                    poss.append(plist)
                     dls.append(dl)
-            if as_bytes:
-                # ONE vectorized delta+varint pass over every posting in
-                # the batch, sliced back per posting (byte-identical to
-                # per-posting encoding; the per-call numpy overhead on
-                # tiny arrays was 93% of kernel time)
-                lens = np.asarray(tfs, dtype=np.int64)
-                flat = np.asarray(flat_pos, dtype=np.int64)
-                seg_starts = np.concatenate(
-                    ([0], np.cumsum(lens)[:-1])
-                ) if lens.size else np.empty(0, dtype=np.int64)
-                poss = codec.encode_varints_segmented(
-                    codec.delta_encode_segmented(flat, seg_starts), lens
-                )
             yield pd.DataFrame(
                 {
                     "term": terms,
                     "doc_id": dids,
                     "tf": pd.array(tfs, dtype="int32"),
-                    ("pos_bytes" if as_bytes else "positions"): pd.Series(
-                        poss, dtype=object
-                    ),
+                    "positions": pd.Series(poss, dtype=object),
                     "dl": pd.array(dls, dtype="int32"),
                 }
             )
 
     return corpus_with_ids.select("url", "text", "doc_id").mapInPandas(
-        _gen, POSTING_BYTES_SCHEMA if as_bytes else POSTING_SCHEMA
+        _gen, POSTING_SCHEMA
     )
-
-
-def with_term_bucket(postings: DataFrame, n_buckets: int = N_TERM_BUCKETS) -> DataFrame:
-    """Storage partition key: bucket(term).  Queries prune scans to the
-    buckets of their terms — the Spark analogue of the reference's
-    ``grep -w term <firstChar>.idx`` (IndexerInvertedCompressed.java:752-796)
-    with a proper hash instead of first-char skew."""
-    return postings.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-
-
-def term_bucket_of(term: str, spark, n_buckets: int = N_TERM_BUCKETS) -> int:
-    """Driver-side bucket computation for scan pruning on lookups."""
-    row = spark.range(1).select(
-        F.pmod(F.xxhash64(F.lit(term)), F.lit(n_buckets)).cast("int").alias("b")
-    ).head()
-    return row.b
 
 
 # --------------------------------------------------------------------------
@@ -308,10 +248,6 @@ def build_segments(
     spark = postings.sparkSession
     if n_parts is None:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # positions either as int arrays (encode here) or as per-doc varint
-    # streams already encoded map-side (concatenate — framing is per value)
-    bytes_mode = "pos_bytes" in postings.columns
-    pos_col = "pos_bytes" if bytes_mode else "positions"
 
     def _encode_groups_batch(
         terms,
@@ -384,13 +320,6 @@ def build_segments(
         )
         if poss is None:
             out["pos_bytes"].extend([b""] * n_blk)
-        elif bytes_mode:
-            # per-doc varint streams concatenate per block (framing is
-            # per value, so no re-encoding)
-            out["pos_bytes"].extend(
-                b"".join(bytes(x) for x in poss[lo:hi])
-                for lo, hi in zip(blk_starts, blk_ends)
-            )
         else:
             # flatten every posting's positions once; delta restarts per
             # POSTING, byte segments group per BLOCK
@@ -463,7 +392,7 @@ def build_segments(
             doc_ids = bdf["doc_id"].to_numpy(dtype=np.int64)
             tfs = bdf["tf"].to_numpy(dtype=np.int64)
             dls = bdf["dl"].to_numpy(dtype=np.int64)
-            poss = bdf[pos_col].to_list() if with_positions else None
+            poss = bdf["positions"].to_list() if with_positions else None
             out = _fresh_out()
             _encode_groups_batch(
                 terms, chunks, doc_ids, tfs, dls, poss,
@@ -484,7 +413,7 @@ def build_segments(
             doc_ids = pend["doc_id"].to_numpy(dtype=np.int64)
             tfs = pend["tf"].to_numpy(dtype=np.int64)
             dls = pend["dl"].to_numpy(dtype=np.int64)
-            poss = pend[pos_col].to_list() if with_positions else None
+            poss = pend["positions"].to_list() if with_positions else None
             _encode_groups_batch(
                 terms, chunks, doc_ids, tfs, dls, poss,
                 starts[:-1], starts[1:], out,
@@ -495,7 +424,7 @@ def build_segments(
         "chunk", (F.col("doc_id") / F.lit(chunk_docs)).cast("long")
     )
     cols = ["term", "chunk", "doc_id", "tf", "dl"] + (
-        [pos_col] if with_positions else []
+        ["positions"] if with_positions else []
     )
     parted = (
         keyed.select(*cols)

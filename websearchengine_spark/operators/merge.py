@@ -34,7 +34,9 @@ def merge_segments(
     from websearchengine_spark.functions import codec
 
     block_docs = block_docs or codec.BLOCK_DOCS
-    cols = [c for c in base.columns if c != "bucket"]
+    # drop whatever else the readers carry (the ``part`` key of a
+    # checkpointed index) so both sides union with the re-encoded groups
+    cols = indexer.SEGMENT_SCHEMA.fieldNames()
     base = base.select(*cols)
     delta = delta.select(*cols)
 

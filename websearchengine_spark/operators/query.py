@@ -4,7 +4,7 @@ The reference iterates DAAT ``nextDoc`` with galloping search
 (IndexerInvertedCompressed.java:404-553); set-at-a-time Spark replaces the
 whole iteration with one shuffle-light plan:
 
-    postings pruned by term (bucket partition pruning ≙ the reference's
+    postings filtered by term in the parquet scan (≙ the reference's
     ``grep -w term <c>.idx``, :752-796)
       -> phrase tokens verified by a positions-adjacency Arrow UDF (Q4/Q5)
       -> unified token-postings relation (token, doc_id, tf, dl)
@@ -36,8 +36,8 @@ def split_tokens(query: str) -> tuple[list[str], list[str], list[str]]:
 
 def word_token_postings(postings: DataFrame, words: list[str]) -> DataFrame:
     """(token, doc_id, tf, dl) for single-word query tokens.  The isin
-    filter sits on a plain column so it pushes into the scan (and prunes
-    term-bucket partitions on the stored table)."""
+    filter sits on a plain column so it pushes into the parquet scan of
+    the stored segments."""
     return (
         postings.where(F.col("term").isin(words))
         .select(F.col("term").alias("token"), "doc_id", "tf", "dl")

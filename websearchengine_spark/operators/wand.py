@@ -40,6 +40,8 @@ from pyspark.sql import types as T
 
 from websearchengine_spark.functions import bm25, codec
 
+RANK_DECIMALS = 9  # scores rank rounded to this: near-ties go to doc_id
+
 _SCORE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -289,11 +291,15 @@ def bm25_topk_segments(
 
 
 def _finalize(scored: DataFrame, mode: str, n_terms: int, k: int) -> DataFrame:
+    """Top k by (score desc, doc_id asc).  The score is ranked rounded to
+    ``RANK_DECIMALS``: partials reach the per-doc sum in shuffle-arrival
+    order, so mathematically tied scores can differ in the last bits, and
+    the rounding lets doc_id break those ties as the oracle does."""
     out = scored
     if mode == "conjunctive":
         out = out.where(F.col("n_hit") == n_terms)
     return (
         out.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .orderBy(F.desc(F.round("score", RANK_DECIMALS)), F.asc("doc_id"))
         .limit(k)
     )

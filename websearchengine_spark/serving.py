@@ -191,7 +191,9 @@ class IndexServer:
                 .select("doc_id", "title")
                 .collect()
             }
-        ranked.sort(key=lambda r: (-r.score, r.doc_id))
+        ranked.sort(
+            key=lambda r: (-round(r.score, wand.RANK_DECIMALS), r.doc_id)
+        )
         return [
             (int(r.doc_id), titles.get(r.doc_id) or "", float(r.score))
             for r in ranked
