@@ -339,6 +339,69 @@ def test_http_count_args_positive_and_capped(spark, http_index):
         srv.close()
 
 
+ORACLE_QUERIES = [
+    ("data data mining", "conjunctive"),
+    ("web search search", "disjunctive"),
+    ('"data mining"', "conjunctive"),
+]
+
+
+def test_served_ranking_equals_oracle(spark, http_index):
+    """``IndexServer.query`` ranks as ``oracle.rank_bm25`` on the same
+    corpus, by (doc_id, score to 6 decimals): on the word path (WAND) a
+    repeated query word counts once per occurrence, as it does on the
+    phrase path and in the oracle."""
+    from websearchengine_spark.oracle import engine as oracle
+    from websearchengine_spark.serving import IndexServer
+
+    idx = oracle.build_index(
+        [r for r in fixture.synth_corpus(48) if r.lang == "en"]
+    )
+    srv = IndexServer(spark, http_index, preload_stats=True)
+    try:
+        for q, mode in ORACLE_QUERIES:
+            got = [(d, round(s, 6)) for d, _, s in srv.query(q, mode=mode)]
+            want = [
+                (d, round(s, 6))
+                for d, s in oracle.rank_bm25(idx, q, k=10, mode=mode)
+            ]
+            assert got and got == want, (q, mode)
+    finally:
+        srv.close()
+
+
+def test_concurrent_clients_match_serial(spark, http_index):
+    """Four client threads share one resident ``IndexServer`` over HTTP:
+    conjunctive and disjunctive word queries, a phrase query and /prf
+    each answer exactly as they do when sent alone."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from websearchengine_spark.serving import IndexServer, serve
+
+    paths = [
+        "/search?query=web+search&num=5",
+        "/search?query=data+mining&ranker=disjunctive&num=5",
+        "/search?query=%22data+mining%22&num=5",
+        "/prf?query=web+search&numdocs=5&numterms=6",
+    ]
+    srv = IndexServer(spark, http_index, preload_stats=True)
+    httpd = serve(srv, port=0, background=True)
+    try:
+        base = f"http://127.0.0.1:{httpd.server_address[1]}"
+        serial = {p: _get(base, p) for p in paths}
+        assert all(status == 200 and body for status, body in serial.values())
+        # every thread sends every shape, each starting at a different one
+        sent = [paths[(i + j) % len(paths)] for j in range(4) for i in range(4)]
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            replies = list(pool.map(lambda p: _get(base, p), sent))
+        assert [(p, r) for p, r in zip(sent, replies)] == [
+            (p, serial[p]) for p in sent
+        ]
+    finally:
+        httpd.shutdown()
+        srv.close()
+
+
 def test_http_500_carries_a_fixed_message():
     """A failing request answers 500 with a fixed message: the exception
     text (paths, plan fragments) never reaches the client."""

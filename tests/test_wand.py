@@ -58,22 +58,58 @@ def test_pruned_equals_unpruned(spark, spark_index, seg_index, terms, mode):
 
 
 def test_matches_postings_path(spark, spark_index, seg_index):
+    """WAND equals the relational scorer, a repeated query word
+    included: each occurrence counts, as in ``score.bm25_scores``."""
     segs, avgdl = seg_index
     n = spark_index["num_docs"]
-    terms = _stem(["data", "mining"])
-    got = wand.bm25_topk_segments(
-        segs, terms, n, avgdl, k=5, mode="conjunctive"
-    ).collect()
-    tp = spark_index["postings"].where(F.col("term").isin(terms)).select(
-        F.col("term").alias("token"), "doc_id", "tf", "dl"
+    for terms in (_stem(["data", "mining"]), _stem(["data", "data", "mining"])):
+        got = wand.bm25_topk_segments(
+            segs, terms, n, avgdl, k=5, mode="conjunctive"
+        ).collect()
+        tp = spark_index["postings"].where(F.col("term").isin(terms)).select(
+            F.col("term").alias("token"), "doc_id", "tf", "dl"
+        )
+        want = (
+            score.topk(score.bm25_scores(tp, terms, n, avgdl, "conjunctive"), 5)
+            .collect()
+        )
+        assert [(r.doc_id, pytest.approx(r.score, rel=1e-9)) for r in got] == [
+            (r.doc_id, r.score) for r in want
+        ], terms
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_block_skip_is_a_predicate_below_the_decode(spark, spark_index, seg_index):
+    """The prune plan's block skip is relational: the survivor decode's
+    input sits under the predicate on ``block_max_weight`` and
+    ``residual`` (Catalyst folds the Filter into the residual join's
+    condition), so skipped blocks never reach the Python decoder; the
+    probe decode has no such predicate."""
+    segs, avgdl = seg_index
+    n = spark_index["num_docs"]
+    out = wand.bm25_topk_segments(
+        segs, _stem(["data", "mining"]), n, avgdl, k=5, mode="conjunctive"
     )
-    want = (
-        score.topk(score.bm25_scores(tp, terms, n, avgdl, "conjunctive"), 5)
-        .collect()
-    )
-    assert [(r.doc_id, pytest.approx(r.score, rel=1e-9)) for r in got] == [
-        (r.doc_id, r.score) for r in want
-    ]
+    plan = out._jdf.queryExecution().optimizedPlan()
+
+    def skip_predicates(decode):
+        return [
+            m
+            for m in _plan_nodes(decode.children().apply(0))
+            if m.nodeName() in ("Filter", "Join")
+            and "block_max_weight" in m.simpleString(1000)
+            and "residual" in m.simpleString(1000)
+        ]
+
+    decodes = [m for m in _plan_nodes(plan) if m.nodeName() == "MapInPandas"]
+    assert len(decodes) == 2  # the probe's and the survivors'
+    assert sorted(len(skip_predicates(d)) for d in decodes) == [0, 1]
 
 
 def test_prune_skips_chunks(spark, spark_index, seg_index):

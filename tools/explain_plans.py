@@ -69,7 +69,10 @@ def main() -> None:
         ).explain("formatted")
 
         print("=" * 72)
-        print("3. WAND segment-path top-k (metadata pass + pruned decode)")
+        print("3. WAND segment-path top-k (metadata pass + pruned decode;")
+        print("   expect the block skip, a predicate on block_max_weight and")
+        print("   residual that Catalyst folds into the residual join's")
+        print("   condition, below decode_segments' MapInPandas)")
         print("=" * 72)
         wand.bm25_topk_segments(
             segs, ["data", "table"], num_docs=500, avgdl=avgdl, k=10

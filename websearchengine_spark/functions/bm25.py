@@ -1,7 +1,7 @@
 """BM25 (k1=1.2, b=0.75, Lucene idf): the engine's one definition.
 
-The relational scorer (``score.bm25_scores``), the WAND decode kernel and
-its block upper bounds (``wand``) and the build-time ``block_max_weight``
+The relational scorer (``score.bm25_scores``), the WAND scorer and its
+block upper bounds (``wand``) and the build-time ``block_max_weight``
 (``indexer.build_segments``) all compute through these functions, so the
 bounds the pruning trusts are the same arithmetic as the scores it
 prunes.  The oracles (``oracle/engine.py`` and the DuckDB SQL of the gate

@@ -366,59 +366,47 @@ def build_segments(
             }
         )
 
+    def _encode(bdf: pd.DataFrame, final: bool):
+        """(segment batch or None, held-back rows): every (term, chunk)
+        group of the sorted ``bdf`` encoded, except, unless ``final``,
+        the last one, which may continue in the next batch."""
+        terms = bdf["term"].to_numpy()
+        chunks = bdf["chunk"].to_numpy()
+        change = (
+            np.flatnonzero(
+                (terms[1:] != terms[:-1]) | (chunks[1:] != chunks[:-1])
+            )
+            + 1
+        )
+        bounds = np.concatenate(([0], change, [len(bdf)]))
+        if not final:
+            bounds = bounds[:-1]
+        if len(bounds) < 2:
+            return None, bdf  # a single (possibly incomplete) group
+        out = _fresh_out()
+        _encode_groups_batch(
+            terms,
+            chunks,
+            bdf["doc_id"].to_numpy(dtype=np.int64),
+            bdf["tf"].to_numpy(dtype=np.int64),
+            bdf["dl"].to_numpy(dtype=np.int64),
+            bdf["positions"].to_list() if with_positions else None,
+            bounds[:-1],
+            bounds[1:],
+            out,
+        )
+        return _to_pdf(out), bdf.iloc[int(bounds[-1]):]
+
     def _gen(batches) -> "pd.DataFrame":
         pend: pd.DataFrame | None = None
         for bdf in batches:
             if pend is not None and len(pend):
                 bdf = pd.concat([pend, bdf], ignore_index=True)
-                pend = None
-            if not len(bdf):
-                continue
-            terms = bdf["term"].to_numpy()
-            chunks = bdf["chunk"].to_numpy()
-            change = (
-                np.flatnonzero(
-                    (terms[1:] != terms[:-1]) | (chunks[1:] != chunks[:-1])
-                )
-                + 1
-            )
-            starts = np.concatenate(([0], change))
-            if len(starts) == 1:
-                pend = bdf  # single (possibly incomplete) group
-                continue
-            # hold the last group back: it may continue in the next batch
-            last = int(starts[-1])
-            pend = bdf.iloc[last:]
-            doc_ids = bdf["doc_id"].to_numpy(dtype=np.int64)
-            tfs = bdf["tf"].to_numpy(dtype=np.int64)
-            dls = bdf["dl"].to_numpy(dtype=np.int64)
-            poss = bdf["positions"].to_list() if with_positions else None
-            out = _fresh_out()
-            _encode_groups_batch(
-                terms, chunks, doc_ids, tfs, dls, poss,
-                starts[:-1], starts[1:], out,
-            )
-            yield _to_pdf(out)
+            seg, pend = _encode(bdf, final=False)
+            if seg is not None:
+                yield seg
         if pend is not None and len(pend):
-            out = _fresh_out()
-            terms = pend["term"].to_numpy()
-            chunks = pend["chunk"].to_numpy()
-            change = (
-                np.flatnonzero(
-                    (terms[1:] != terms[:-1]) | (chunks[1:] != chunks[:-1])
-                )
-                + 1
-            )
-            starts = np.concatenate(([0], change, [len(pend)]))
-            doc_ids = pend["doc_id"].to_numpy(dtype=np.int64)
-            tfs = pend["tf"].to_numpy(dtype=np.int64)
-            dls = pend["dl"].to_numpy(dtype=np.int64)
-            poss = pend["positions"].to_list() if with_positions else None
-            _encode_groups_batch(
-                terms, chunks, doc_ids, tfs, dls, poss,
-                starts[:-1], starts[1:], out,
-            )
-            yield _to_pdf(out)
+            yield _encode(pend, final=True)[0]
 
     keyed = postings.withColumn(
         "chunk", (F.col("doc_id") / F.lit(chunk_docs)).cast("long")

@@ -9,9 +9,10 @@ ever touching compressed bytes:
 1. **metadata pass (no decode)** — for the query's terms, read only the
    segment METADATA columns (term, chunk, block_max_weight, n_docs).  A
    doc in chunk c can score at most
-   ``chunk_ub(c) = Σ_t max_blocks(idf_t · (k1+1) · block_max_weight)`` —
-   the sum of per-term maxima over c's blocks (terms absent from c
-   contribute 0, so the bound is sound).
+   ``chunk_ub(c) = Σ_t max_blocks(w_t · (k1+1) · block_max_weight)`` —
+   the sum of per-term maxima over c's blocks, where ``w_t`` is the
+   term's query count times its idf (terms absent from c contribute 0,
+   so the bound is sound).
 2. **probe** — exactly score the few chunks with the highest upper
    bounds; the k-th best probe score is the threshold θ (a LOWER bound on
    the final k-th score).
@@ -19,110 +20,70 @@ ever touching compressed bytes:
    ``chunk_ub ≥ θ``; every skipped chunk provably contains no top-k doc.
    Inside surviving chunks, individual blocks are skipped the same way:
    ``block_ub(t, blk) + (chunk_ub − chunk_max_t) < θ`` ⇒ no doc whose
-   term-t postings sit in blk can reach θ via that block... (conservative
+   term-t postings sit in blk can reach θ via that block (conservative
    per-block refinement using the chunk residual).
 
-Everything stays relational until the decode UDF; the segment scan reads
-only metadata columns for pruned-away chunks (Parquet column pruning), so
-the prune saves both decode CPU and byte I/O.  Conjunctive mode
-additionally drops chunks that lack any query term before probing.
+Both skips are relational predicates: the block skip is a ``Filter`` on
+``block_max_weight`` and ``residual`` below the decode, so a skipped
+block's bytes never reach Python and the pruning shows in ``explain``.
+Scoring is ``indexer.decode_segments`` (the package's one segment
+decoder) plus one BM25 column expression and a sum per doc.  The segment
+scan reads only metadata columns for pruned-away chunks (Parquet column
+pruning), so the prune saves both decode CPU and byte I/O.  Conjunctive
+mode additionally drops chunks that lack any query term before probing.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from collections import Counter
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from websearchengine_spark.functions import bm25, codec
+from websearchengine_spark.functions import bm25
+from websearchengine_spark.operators import indexer
 
 RANK_DECIMALS = 9  # scores rank rounded to this: near-ties go to doc_id
 
-_SCORE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("partial", T.DoubleType(), False),
-        T.StructField("term", T.StringType(), False),
-    ]
-)
 
-
-def _decode_score_udf(idfs: dict[str, float], avgdl: float, theta: float):
-    """mapInPandas kernel: varint-decode blocks, per-block ub skip, emit
-    (doc_id, partial, term) BM25 partials."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bdf in batches:
-            docs_out, part_out, term_out = [], [], []
-            # zip over column arrays (one iteration per 128-posting block;
-            # no pandas row objects in the hot decode path)
-            for term, bmw, residual, gaps, tfb, dlb in zip(
-                bdf["term"], bdf["block_max_weight"], bdf["residual"],
-                bdf["doc_gap_bytes"], bdf["tf_bytes"], bdf["dl_bytes"],
-            ):
-                idf = idfs[term]
-                # conservative per-block skip: this block's best possible
-                # total = its own ub + best the OTHER terms can add in the
-                # chunk (residual precomputed relationally)
-                if bm25.weight(idf, bmw) + residual < theta:
-                    continue
-                doc_ids = codec.delta_decode(codec.decode_varints(gaps))
-                tfs = codec.decode_varints(tfb).astype(np.float64)
-                dls = codec.decode_varints(dlb).astype(np.float64)
-                w = bm25.weight(idf, bm25.tf_norm(tfs, dls, avgdl))
-                docs_out.extend(doc_ids.tolist())
-                part_out.extend(w.tolist())
-                term_out.extend([term] * len(doc_ids))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(docs_out, dtype="int64"),
-                    "partial": pd.array(part_out, dtype="float64"),
-                    "term": term_out,
-                }
-            )
-
-    return _gen
+def _weight_col(weights: dict[str, float]) -> Column:
+    """Each segment row's query weight (the term's count in the query
+    times its idf), looked up in a ``create_map`` literal by ``term``."""
+    return F.create_map(
+        *[x for t, v in weights.items() for x in (F.lit(t), F.lit(v))]
+    )[F.col("term")]
 
 
 def _score_chunks(
-    segs: DataFrame,
-    idfs: dict[str, float],
-    avgdl: float,
-    theta: float,
+    segs: DataFrame, weights: dict[str, float], avgdl: float
 ) -> DataFrame:
-    """(doc_id, score, n_hit) for the given segment rows (must carry a
-    ``residual`` column for block-level pruning; pass residual=inf to
-    disable)."""
-    partials = segs.select(
-        "term",
-        "block_max_weight",
-        "residual",
-        "doc_gap_bytes",
-        "tf_bytes",
-        "dl_bytes",
-    ).mapInPandas(_decode_score_udf(idfs, avgdl, theta), _SCORE_SCHEMA)
-    return partials.groupBy("doc_id").agg(
-        F.sum("partial").alias("score"),
-        F.count_distinct("term").alias("n_hit"),
+    """(doc_id, score, n_hit) for the given segment rows: the shared
+    segment decode, one BM25 column expression per posting, and a sum
+    per doc."""
+    partial = bm25.weight(
+        _weight_col(weights), bm25.tf_norm(F.col("tf"), F.col("dl"), avgdl)
+    )
+    return (
+        indexer.decode_segments(segs)
+        .groupBy("doc_id")
+        .agg(
+            F.sum(partial).alias("score"),
+            F.count_distinct("term").alias("n_hit"),
+        )
     )
 
 
 def _chunk_bounds(
-    segs: DataFrame, idfs: dict[str, float], mode: str, n_terms: int
+    segs: DataFrame, weights: dict[str, float], mode: str, n_terms: int
 ) -> tuple[DataFrame, DataFrame]:
     """(per_term, chunk_meta) from the metadata columns alone: each
     (chunk, term)'s best block bound ``tub``, and per chunk the sum of
     those, ``chunk_ub`` (conjunctive mode keeps only chunks holding every
     term)."""
-    idf_col = F.create_map(
-        *[x for t, v in idfs.items() for x in (F.lit(t), F.lit(v))]
-    )[F.col("term")]
     per_term = segs.groupBy("chunk", "term").agg(
-        F.max(bm25.weight(idf_col, F.col("block_max_weight"))).alias("tub")
+        F.max(
+            bm25.weight(_weight_col(weights), F.col("block_max_weight"))
+        ).alias("tub")
     )
     chunk_meta = per_term.groupBy("chunk").agg(
         F.sum("tub").alias("chunk_ub"),
@@ -149,7 +110,9 @@ def bm25_topk_segments(
     prune_min_chunks: int = 16,
 ) -> DataFrame:
     """(doc_id, score) top-k BM25 from compressed segments with block-max
-    chunk/block pruning.  ``stats`` (optional dict) receives
+    chunk/block pruning.  A term repeated in ``query_terms`` counts once
+    per occurrence, as in ``score.bm25_scores`` and the oracle.
+    ``stats`` (optional dict) receives
     {n_chunks, probed, survivors, theta} for observability/tests.
     ``term_df`` (optional) supplies precomputed {term: df} serve-mode
     stats (the reference's in-memory maps), skipping the per-query
@@ -168,9 +131,10 @@ def bm25_topk_segments(
     strictly cheaper and the prune is skipped; results are identical by
     the pruned == unpruned invariant.  At web scale hot terms have
     thousands of chunks and the threshold never triggers.  The single
-    pass builds no chunk bounds: term filter, decode kernel, one
-    aggregation, top-k."""
-    terms = sorted(set(query_terms))
+    pass builds no chunk bounds: term filter, decode, one aggregation,
+    top-k."""
+    counts = Counter(query_terms)
+    terms = sorted(counts)
     segs = segments.where(F.col("term").isin(terms))
     if prune and term_chunks is not None:
         if sum(term_chunks.get(t, 0) for t in terms) <= prune_min_chunks:
@@ -180,8 +144,8 @@ def bm25_topk_segments(
         term_df = {t: term_df[t] for t in terms if term_df.get(t, 0) > 0}
         # a stale stats map may lack a term whose segments exist (e.g. a
         # delta appended after the sidecar was written): keep the segment
-        # scan and the idf map consistent so the decode kernel never sees
-        # a term without an idf entry
+        # scan and the weight map consistent so no decoded posting meets
+        # a term without a weight
         segs = segs.where(F.col("term").isin(list(term_df)))
     else:
         # metadata pass (Parquet reads only the narrow columns)
@@ -195,21 +159,18 @@ def bm25_topk_segments(
         return segments.sparkSession.createDataFrame(
             [], "doc_id long, score double"
         )
-    idfs = {t: bm25.idf(df, num_docs) for t, df in term_df.items()}
+    weights = {
+        t: counts[t] * bm25.idf(df, num_docs) for t, df in term_df.items()
+    }
 
     def _materialize(df: DataFrame) -> DataFrame:
         rows = df.collect()
         return segments.sparkSession.createDataFrame(rows, df.schema)
 
     if not prune:
-        scored = _score_chunks(
-            segs.withColumn("residual", F.lit(float("inf"))),
-            idfs,
-            avgdl,
-            float("-inf"),
-        )
+        scored = _score_chunks(segs, weights, avgdl)
         if stats is not None:
-            n_chunks = _chunk_bounds(segs, idfs, mode, len(terms))[1].count()
+            n_chunks = _chunk_bounds(segs, weights, mode, len(terms))[1].count()
             stats.update(
                 n_chunks=n_chunks, probed=n_chunks, survivors=0,
                 theta=float("-inf"),
@@ -217,12 +178,7 @@ def bm25_topk_segments(
         out = _finalize(scored, mode, len(terms), k)
         return _materialize(out) if eager else out
 
-    per_term, chunk_meta = _chunk_bounds(segs, idfs, mode, len(terms))
-    # residual per (chunk, term) = chunk_ub - that term's chunk max
-    residual = per_term.join(chunk_meta.select("chunk", "chunk_ub"), "chunk").select(
-        "chunk", "term", (F.col("chunk_ub") - F.col("tub")).alias("residual")
-    )
-    segs_r = segs.join(residual, ["chunk", "term"])
+    per_term, chunk_meta = _chunk_bounds(segs, weights, mode, len(terms))
 
     # --- probe: exact scores for the top-ub chunks -> theta ---
     # TakeOrderedAndProject keeps the selection distributed; the driver
@@ -242,10 +198,7 @@ def bm25_topk_segments(
         .collect()
     ]
     probe_scored = _score_chunks(
-        segs_r.where(F.col("chunk").isin(probe_ids)),
-        idfs,
-        avgdl,
-        float("-inf"),
+        segs.where(F.col("chunk").isin(probe_ids)), weights, avgdl
     )
     if eager:
         # serve mode: reuse the probe scores between the theta pass and
@@ -273,16 +226,26 @@ def bm25_topk_segments(
             survivors=survivors_df.count(),
             theta=theta,
         )
-    surv_scored = _score_chunks(
-        segs_r.join(survivors_df, "chunk"),
-        idfs,
-        avgdl,
-        theta,
+    # block skip, a Filter below the decode: a block can only lift a doc
+    # to theta if its own bound plus the best the OTHER terms can add in
+    # the chunk (residual = chunk_ub - this term's chunk max) reaches it
+    residual = per_term.join(chunk_meta.select("chunk", "chunk_ub"), "chunk").select(
+        "chunk", "term", (F.col("chunk_ub") - F.col("tub")).alias("residual")
     )
-    scored = probe_scored.unionByName(surv_scored)
-    # block-level skips can drop SOME partials of a below-theta doc, so
-    # re-aggregate and keep docs whose retained score clears theta OR that
-    # came from the probe (probe is exact)
+    surv_segs = (
+        segs.join(survivors_df, "chunk")
+        .join(residual, ["chunk", "term"])
+        .where(
+            bm25.weight(_weight_col(weights), F.col("block_max_weight"))
+            + F.col("residual")
+            >= F.lit(theta)
+        )
+    )
+    scored = probe_scored.unionByName(
+        _score_chunks(surv_segs, weights, avgdl)
+    )
+    # a skipped block can drop SOME partials of a below-theta doc, so its
+    # retained score stays below theta and below the probe's k-th score
     out = _finalize(scored, mode, len(terms), k)
     if eager:
         out = _materialize(out)

@@ -136,12 +136,9 @@ class IndexServer:
         )
         return {r.term: r.df for r in rows}, chunks
 
-    def query(
-        self, q: str, k: int = 10, mode: str = "conjunctive"
-    ) -> list[tuple[int, str, float]]:
-        """[(doc_id, title, score)] best-first — WAND for word queries,
-        the chunk-pruned positional path for phrases; titles are read for
-        the <= k ranked ids only."""
+    def _rank(self, q: str, k: int, mode: str) -> list:
+        """The <= k ranked rows (doc_id, score) of ``q``, best-first — WAND
+        for word queries, the chunk-pruned positional path for phrases."""
         from websearchengine_spark.operators import query as Q
         from websearchengine_spark.operators import score, wand
 
@@ -170,9 +167,11 @@ class IndexServer:
             )
         else:
             term_df, term_chunks = self._term_maps_for(words)
+            # tokens, not the distinct words: a repeated word counts per
+            # occurrence
             out = wand.bm25_topk_segments(
                 self.segs,
-                words,
+                tokens,
                 num_docs=self.stats["num_docs"],
                 avgdl=self.stats["avgdl"],
                 k=k,
@@ -182,6 +181,17 @@ class IndexServer:
                 term_chunks=term_chunks,
             )
         ranked = out.collect()
+        ranked.sort(
+            key=lambda r: (-round(r.score, wand.RANK_DECIMALS), r.doc_id)
+        )
+        return ranked
+
+    def query(
+        self, q: str, k: int = 10, mode: str = "conjunctive"
+    ) -> list[tuple[int, str, float]]:
+        """[(doc_id, title, score)] best-first; titles are read for the
+        <= k ranked ids only."""
+        ranked = self._rank(q, k, mode)
         titles = {}
         if ranked and self.titles is not None:
             ids = [r.doc_id for r in ranked]
@@ -191,9 +201,6 @@ class IndexServer:
                 .select("doc_id", "title")
                 .collect()
             }
-        ranked.sort(
-            key=lambda r: (-round(r.score, wand.RANK_DECIMALS), r.doc_id)
-        )
         return [
             (int(r.doc_id), titles.get(r.doc_id) or "", float(r.score))
             for r in ranked
@@ -204,17 +211,17 @@ class IndexServer:
     ) -> list[tuple[str, float]]:
         """G5 pseudo-relevance feedback over the serve index (the
         reference's /prf route, QueryHandler.java:565-583): rank top
-        ``num_docs``, sum term tfs over those docs, top ``num_terms``
-        with retained-mass normalization.  The inverted segments are
+        ``num_docs`` (no titles read), sum term tfs over those docs, top
+        ``num_terms`` with retained-mass normalization.  The inverted segments are
         term-major, so 'all terms of doc X' decodes only the docs'
         CHUNKS (chunk = doc_id // chunk_docs — ≤ num_docs chunk keys,
         pruned before the decode UDF) rather than the whole index."""
         from websearchengine_spark.operators import indexer, mining
 
-        ranked = self.query(q, k=num_docs)
+        ranked = self._rank(q, num_docs, "conjunctive")
         if not ranked:
             return []
-        doc_ids = [d for d, _, _ in ranked]
+        doc_ids = [int(r.doc_id) for r in ranked]
         chunks = sorted({d // self.cp.chunk_docs for d in doc_ids})
         posts = indexer.decode_segments(
             self.segs.where(F.col("chunk").isin(chunks)),
