@@ -1,5 +1,5 @@
-"""Resumable-build (checkpoint lineage, kill/restart) and segment-merge
-compaction tests — north_star gates."""
+"""Resumable-build (checkpoint lineage, kill/restart) tests — north_star
+gates.  The index merge is tested end to end in tests/test_cli.py."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from websearchengine_spark.operators import checkpoint, indexer, merge
+from websearchengine_spark.operators import checkpoint, indexer
 
 
 def _seg_rows(df):
@@ -71,6 +71,24 @@ def test_kill_and_resume(spark, corpus_ids, single_shot, tmp_path):
     assert seqs == list(range(len(seqs)))
 
 
+def test_resume_at_another_avgdl_refused(spark, corpus_ids, tmp_path):
+    """Each manifest line records the avgdl its block-max weights were
+    encoded at; a resume at another avgdl would mix the bounds of two
+    avgdls in one index, so it is refused and commits nothing."""
+    cp = checkpoint.IndexCheckpointer(
+        str(tmp_path / "idx3"), docs_per_part=32, chunk_docs=16
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        cp.build(corpus_ids, avgdl=100.0, fail_after_parts=1)
+    assert [lin.avgdl for lin in cp.lineage()] == [100.0]
+    with pytest.raises(ValueError, match="avgdl"):
+        cp.build(corpus_ids, avgdl=90.0)
+    assert len(cp.committed_parts()) == 1
+    cp.build(corpus_ids, avgdl=100.0)
+    assert {lin.avgdl for lin in cp.lineage()} == {100.0}
+    assert len(cp.committed_parts()) >= 2
+
+
 def test_part_directory_is_flat(spark, corpus_ids, tmp_path):
     """A committed part is one directory of term-sorted parquet files:
     no sub-partition directories, and the read-back table is the segment
@@ -84,6 +102,7 @@ def test_part_directory_is_flat(spark, corpus_ids, tmp_path):
     assert cp.segments(spark).columns == (
         indexer.SEGMENT_SCHEMA.fieldNames() + ["part"]
     )
+    assert cp.docs(spark).columns == ["doc_id", "title", "part"]
 
 
 def test_misaligned_chunk_rejected(tmp_path):
@@ -91,34 +110,3 @@ def test_misaligned_chunk_rejected(tmp_path):
         checkpoint.IndexCheckpointer(
             str(tmp_path / "bad"), docs_per_part=24, chunk_docs=16
         )
-
-
-def test_merge_disjoint_and_colliding(spark, corpus_ids, single_shot):
-    # split mid-chunk so some (term, chunk) groups collide across the two
-    # builds and must be decoded + re-encoded
-    left = corpus_ids.where(F.col("doc_id") < 25)
-    right = corpus_ids.where(F.col("doc_id") >= 25)
-    seg_l = indexer.build_segments(
-        indexer.build_postings(left), avgdl=100.0, chunk_docs=16
-    )
-    seg_r = indexer.build_segments(
-        indexer.build_postings(right), avgdl=100.0, chunk_docs=16
-    )
-    merged = merge.merge_segments(seg_l, seg_r, avgdl=100.0, chunk_docs=16)
-    assert _seg_rows(merged) == _seg_rows(single_shot)
-
-
-def test_merge_only_touches_overlap(spark, corpus_ids):
-    # doc ranges aligned to chunk boundaries -> zero colliding groups ->
-    # merge must be pure union (no re-encode): verify count identity
-    left = corpus_ids.where(F.col("doc_id") < 16)
-    right = corpus_ids.where((F.col("doc_id") >= 16) & (F.col("doc_id") < 32))
-    seg_l = indexer.build_segments(
-        indexer.build_postings(left), avgdl=100.0, chunk_docs=16
-    )
-    seg_r = indexer.build_segments(
-        indexer.build_postings(right), avgdl=100.0, chunk_docs=16
-    )
-    merged = merge.merge_segments(seg_l, seg_r, avgdl=100.0, chunk_docs=16)
-    assert merged.count() == seg_l.count() + seg_r.count()
-    assert _seg_rows(merged) == sorted(_seg_rows(seg_l) + _seg_rows(seg_r))

@@ -5,7 +5,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -110,6 +109,7 @@ def test_http_serving_endpoint(spark, http_index):
             assert e.code == 404
     finally:
         httpd.shutdown()
+        srv.close()
 
 
 def test_http_prf_route(spark, http_index):
@@ -142,6 +142,7 @@ def test_http_prf_route(spark, http_index):
         assert ok.splitlines()
     finally:
         httpd.shutdown()
+        srv.close()
 
 
 def _ads_seed(tmp_path):
@@ -286,6 +287,31 @@ def test_index_server_close_restores_shuffle_conf(spark, http_index):
         )
         assert srv.term_df is not None  # stats sidecar preloaded
         srv.close()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_index_server_close_keeps_other_servers_resident(spark, http_index):
+    """Two resident servers on one index share its cached segment plan
+    and the session's pinned width: closing one leaves both in place for
+    the other, and closing the last releases both."""
+    from websearchengine_spark import serving
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        a = serving.IndexServer(spark, http_index)
+        b = serving.IndexServer(spark, http_index)
+        a.close()
+        assert b.segs.storageLevel.useMemory
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+            serving.SERVE_PARTITIONS
+        )
+        assert b.query("web search", k=3)
+        b.close()
+        assert not b.segs.storageLevel.useMemory
+        assert not b.segs.storageLevel.useDisk
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -460,57 +486,73 @@ def test_build_from_warc_matches_parquet(spark, corpus_dir, tmp_path, capsys):
     assert outs[0] == outs[1] and outs[0]
 
 
-def test_merge_unions_the_committed_parts_of_two_builds(
-    spark, corpus_dir, tmp_path, capsys
+def test_merge_equals_build_over_the_union_corpus(
+    spark, corpus_dir, http_index, tmp_path, capsys
 ):
-    """`cli merge` over two `cli build` outputs: the merged segments decode
-    to the multiset union of both inputs' committed postings; a part
-    directory the manifest never committed (a crash mid-write) stays out;
-    re-encoded groups keep the inputs' chunk width, so every block lies in
-    its chunk and no (term, chunk, block_seq) key repeats."""
-    from websearchengine_spark.operators import checkpoint, indexer
+    """`cli merge` of two `cli build`s over the url-hash halves of the
+    fixture corpus renumbers by the union's url rank: it equals `cli
+    build` over the union corpus (``http_index``) in segments, docs,
+    term_stats and stats.json, and serves the same ranking.  The base
+    also holds one of the delta's urls with other text, and the delta's
+    row wins (a re-crawl); a part directory the delta's manifest never
+    committed stays out; the merged index merges again."""
+    from websearchengine_spark.operators import checkpoint
+    from websearchengine_spark.serving import IndexServer
 
     corpus = spark.read.parquet(corpus_dir)
     half = F.pmod(F.xxhash64("url"), F.lit(2))
+    en = corpus.where(F.col("lang") == "en")
+    stale = en.where(half == 1).limit(1)
+    halves = [
+        corpus.where(half == 0).unionByName(
+            stale.withColumn("text", F.lit("stale web search text"))
+        ),
+        corpus.where(half == 1),
+        en.limit(4).withColumn("url", F.concat(F.lit("z/"), "url")),
+    ]
     builds = []
-    for i in (0, 1):
+    for i, df in enumerate(halves):
         src = str(tmp_path / f"corpus{i}")
-        corpus.where(half == i).write.parquet(src)
+        df.write.parquet(src)
         out = str(tmp_path / f"idx{i}")
         cli.main(["build", "--corpus", src, "--out", out,
                   "--docs-per-part", "16"])
         builds.append(out)
-    base, delta = builds
+    base, delta, third = builds
     shutil.copytree(
         os.path.join(delta, "segments", "part=0"),
         os.path.join(delta, "segments", "part=7"),
     )
-    with open(os.path.join(base, "stats.json")) as f:
-        avgdl = json.load(f)["avgdl"]
     capsys.readouterr()
 
-    merged_dir = str(tmp_path / "merged")
-    cli.main(["merge", "--base", base, "--delta", delta, "--out",
-              merged_dir, "--avgdl", str(avgdl)])
-    merged = spark.read.parquet(os.path.join(merged_dir, "segments"))
+    merged = str(tmp_path / "merged")
+    cli.main(["merge", "--base", base, "--delta", delta, "--out", merged])
+    want = checkpoint.IndexCheckpointer.open(http_index)
+    got = checkpoint.IndexCheckpointer.open(merged)
 
-    def postings(segs):
-        return Counter(
-            tuple(r)
-            for r in indexer.decode_segments(segs)
-            .select("term", "doc_id", "tf")
-            .collect()
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert got.stats == want.stats
+    assert rows(got.segments(spark)) == rows(want.segments(spark))
+    assert rows(got.docs(spark)) == rows(want.docs(spark))
+    assert rows(spark.read.parquet(os.path.join(merged, "term_stats"))) == (
+        rows(spark.read.parquet(os.path.join(http_index, "term_stats")))
+    )
+    served = [
+        IndexServer(spark, d, preload_stats=False) for d in (merged, http_index)
+    ]
+    for q, mode in ORACLE_QUERIES:
+        got_q, want_q = (
+            [(d, t, round(s, 6)) for d, t, s in srv.query(q, mode=mode)]
+            for srv in served
         )
+        assert got_q and got_q == want_q, (q, mode)
 
-    want = Counter()
-    for d in builds:
-        want += postings(checkpoint.IndexCheckpointer(d).segments(spark))
-    assert postings(merged) == want and want
-    keys = merged.select("term", "chunk", "block_seq", "first_doc_id",
-                         "last_doc_id").collect()
-    assert len({(r.term, r.chunk, r.block_seq) for r in keys}) == len(keys)
-    assert all(
-        r.first_doc_id // 16 == r.chunk == r.last_doc_id // 16 for r in keys
+    again = str(tmp_path / "merged2")
+    cli.main(["merge", "--base", merged, "--delta", third, "--out", again])
+    assert checkpoint.IndexCheckpointer.open(again).stats["num_docs"] == (
+        want.stats["num_docs"] + 4
     )
 
 

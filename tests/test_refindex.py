@@ -244,45 +244,6 @@ def test_wand_segments_on_real_index(ref_tables, oracle_idx):
 
 
 @needs_ref_index
-def test_segment_merge_on_real_index(ref_tables):
-    """A7 compaction over REAL postings: encode two disjoint doc-range
-    halves of the shipped index independently, merge, and the result must
-    be byte-identical (per (term, chunk) payload) to the single-shot
-    encode — disjoint ranges take the pure-union path, zero decode."""
-    from websearchengine_spark.operators import indexer, merge
-
-    postings, _, n, tot = ref_tables
-    avgdl = tot / n
-    terms = ["quebec", "zealand", "juli"]
-    sub = postings.where(F_col("term").isin(terms))
-    cd = 1024
-    lo = sub.where(F_col("doc_id") < 5 * cd)
-    hi = sub.where(F_col("doc_id") >= 5 * cd)
-    kw = dict(avgdl=avgdl, chunk_docs=cd, block_docs=128)
-    single = indexer.build_segments(sub, **kw)
-    merged = merge.merge_segments(
-        indexer.build_segments(lo, **kw),
-        indexer.build_segments(hi, **kw),
-        avgdl=avgdl,
-        chunk_docs=cd,
-        block_docs=128,
-    )
-
-    def key_payloads(df):
-        return {
-            (r.term, r.chunk): (
-                bytes(r.doc_gap_bytes),
-                bytes(r.tf_bytes),
-                bytes(r.dl_bytes),
-                bytes(r.pos_bytes),
-            )
-            for r in df.collect()
-        }
-
-    assert key_payloads(merged) == key_payloads(single)
-
-
-@needs_ref_index
 def test_cosine_parity_real_index(ref_tables, oracle_idx):
     from websearchengine_spark.operators import score as S
 

@@ -97,6 +97,14 @@ def test_incremental_index_stream_builds_manifest(spark, tmp_path):
 
     decoded = indexer.decode_segments(segs)
     assert decoded.where(F.col("tf") <= 0).count() == 0
+    # every micro-batch finishes the index, so it can be served as is
+    from websearchengine_spark.serving import IndexServer
+
+    urls = {r.url for r in batch.select("url").collect()}
+    got = IndexServer(spark, out, preload_stats=False).query(
+        "web search", mode="disjunctive"
+    )
+    assert got and all(title in urls for _, title, _ in got)
 
 
 def test_ctr_state_stream_equals_batch_fold(spark, tmp_path):

@@ -313,3 +313,17 @@ def test_finalize_breaks_near_ties_by_doc_id(spark):
     )
     got = wand._finalize(scored, "disjunctive", 1, 1).collect()
     assert [(r.doc_id, r.score) for r in got] == [(3, 0.6)]
+
+
+def test_topk_breaks_near_ties_by_doc_id(spark):
+    """``score.topk``, the top-k order of the phrase path and the gates,
+    ranks scores equal up to summation order by doc_id too, and keeps
+    the score unrounded."""
+    scored = spark.createDataFrame(
+        [(5, 0.6000000000000001), (3, 0.6), (4, 0.5)],
+        "doc_id long, score double",
+    )
+    got = score.topk(scored, 2).collect()
+    assert [(r.doc_id, r.score) for r in got] == [
+        (3, 0.6), (5, 0.6000000000000001)
+    ]

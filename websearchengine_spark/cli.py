@@ -9,7 +9,7 @@ Usage (also works under plain ``python -m websearchengine_spark.cli``):
 
   build  --corpus <parquet dir> --out <index dir> [--docs-per-part N]
   query  --index <index dir> --q "web search" [--k 10] [--mode conjunctive]
-  merge  --base <dir> --delta <dir> --out <dir> --avgdl X
+  merge  --base <index dir> --delta <index dir> --out <index dir>
   mine   --corpus <parquet dir> --out <dir>          # PageRank + edges
   serve  --index <index dir> [--port 25805]          # HTTP /search
 
@@ -201,14 +201,10 @@ def cmd_build(args) -> None:
     corpus = _ensure_url(corpus)
     n_total = corpus.count()
     ids = indexer.assign_doc_ids(corpus.select("url", "text"))
-    # avgdl for block-max weights, estimated from a deterministic url-hash
-    # sample of ~AVGDL_SAMPLE_DOCS docs (xxhash64(url) % K == 0).  A
-    # doc_id-prefix sample would be the alphabetically-first urls — at web
-    # scale likely one site/prefix — whereas the hash sample is uniform
-    # over the corpus with the same determinism.  Tokenization dominates
-    # build cost; for corpora under the cap K == 1 and the estimate IS
-    # exact.  The estimate is stored and used by every reader, so scoring
-    # and block-max bounds stay consistent.
+    # avgdl for block-max weights, from a deterministic url-hash sample of
+    # ~AVGDL_SAMPLE_DOCS docs (xxhash64(url) % K == 0): uniform over the
+    # corpus, unlike a doc_id prefix (one site at web scale), and exact
+    # under the cap, where K == 1.  Every part records it in the manifest.
     sample_mod = max(1, n_total // AVGDL_SAMPLE_DOCS)
     sample = ids
     if sample_mod > 1:
@@ -216,47 +212,12 @@ def cmd_build(args) -> None:
             F.pmod(F.xxhash64(F.col("url")), F.lit(sample_mod)) == 0
         )
     n_sample = n_total if sample_mod == 1 else sample.count()
-    # denominator = ALL sampled docs (zero-token docs included), matching
-    # collection_stats and the reference's total/_numDocs
-    total_dl = (
-        indexer.build_postings(sample)
-        .groupBy("doc_id")
-        .agg(F.first("dl").alias("dl"))
-        .agg(F.sum("dl"))
-        .head()[0]
-        or 0
-    )
-    avgdl = (total_dl / n_sample) if n_sample and total_dl else 1.0
+    avgdl = indexer.mean_doc_length(indexer.build_postings(sample), n_sample)
     cp = checkpoint.IndexCheckpointer(
         args.out, docs_per_part=args.docs_per_part
     )
     written = cp.build(ids, avgdl=avgdl)
-    # docs sidecar for serving: title joins in query output (the reference
-    # uses the corpus file name as the title, ScoredDocument.java:15-18)
-    ids.select("doc_id", F.col("url").alias("title")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(args.out, "docs"))
-    # term-stats sidecar (df/ctf from segment metadata, no re-tokenize):
-    # the serve analogue of the reference's in-memory stats maps
-    segs = cp.segments(spark)
-    # n_chunks feeds the serve-side cost-based prune decision
-    # (wand.bm25_topk_segments term_chunks/prune_min_chunks)
-    segs.groupBy("term").agg(
-        F.sum("n_docs").cast("long").alias("df"),
-        F.sum("sum_tf").cast("long").alias("ctf"),
-        F.count_distinct("chunk").cast("long").alias("n_chunks"),
-    ).write.mode("overwrite").parquet(os.path.join(args.out, "term_stats"))
-    # exact corpus stats come free from the per-partition lineage manifest
-    # — no second tokenization pass
-    lineage = cp.lineage()
-    meta = {
-        "num_docs": int(sum(l.n_docs for l in lineage)),
-        "total_terms": int(sum(l.sum_tf for l in lineage)),
-        "avgdl": avgdl,
-        "docs_per_part": args.docs_per_part,
-    }
-    with open(os.path.join(args.out, "stats.json"), "w") as f:
-        json.dump(meta, f)
+    meta = cp.finish(spark)
     print(
         json.dumps(
             {
@@ -304,26 +265,14 @@ def cmd_merge(args) -> None:
     from websearchengine_spark.operators import checkpoint, merge
 
     spark = _spark(args.cpus)
-    # committed parts only, at the chunk width each input was built with
-    cps = []
-    for index_dir in (args.base, args.delta):
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            dpp = json.load(f)["docs_per_part"]
-        cps.append(checkpoint.IndexCheckpointer(index_dir, docs_per_part=dpp))
-    base, delta = cps
-    if base.chunk_docs != delta.chunk_docs:
-        raise SystemExit(
-            f"cannot merge: chunk widths differ ({base.chunk_docs} vs "
-            f"{delta.chunk_docs})"
-        )
-    merged = merge.merge_segments(
-        base.segments(spark),
-        delta.segments(spark),
-        avgdl=args.avgdl,
-        chunk_docs=base.chunk_docs,
+    base = checkpoint.IndexCheckpointer.open(args.base)
+    out = checkpoint.IndexCheckpointer(
+        args.out, docs_per_part=base.docs_per_part
     )
-    merged.write.mode("overwrite").parquet(os.path.join(args.out, "segments"))
-    print(json.dumps({"segments": merged.count(), "out": args.out}))
+    meta = merge.merge_indexes(
+        spark, base, checkpoint.IndexCheckpointer.open(args.delta), out
+    )
+    print(json.dumps({"out": args.out, **meta}))
 
 
 def cmd_mine(args) -> None:
@@ -365,7 +314,6 @@ def main(argv=None) -> None:
     m.add_argument("--base", required=True)
     m.add_argument("--delta", required=True)
     m.add_argument("--out", required=True)
-    m.add_argument("--avgdl", type=float, required=True)
     m.set_defaults(fn=cmd_merge)
 
     g = sub.add_parser("mine")

@@ -1,9 +1,18 @@
-"""Incremental, resumable index build with per-partition lineage.
+"""Incremental, resumable index build with per-partition lineage: the one
+writer of an index directory.
 
 north_star contract (BASELINE.json): "per-partition checkpoints record
 lineage (input snapshot, partition range, posting bytes, term counts) so a
 killed job restarts from the last committed partition, and segment-merge
 compacts partial indexes without re-tokenizing".
+
+Index directory: per committed part ``segments/part=<id>/`` and
+``docs/part=<id>/`` (doc_id, title = url), one ``manifest.jsonl`` lineage
+line per part (with the avgdl its blocks were encoded at), and the two
+sidecars ``finish`` derives: ``term_stats/`` from the segments and
+``stats.json`` from the manifest.  ``cli build``, ``cli merge`` and the
+stream writer all commit parts here and finish, so every index they write
+can be served (``IndexCheckpointer.open``) and merged again.
 
 Design
 ------
@@ -19,11 +28,11 @@ Design
 - ``docs_per_part`` must be a multiple of the segment ``chunk_docs`` so the
   (term, chunk) groups of a partition never straddle partitions — the
   incremental output is then byte-identical to a single-shot build
-  (tested), and compaction never has to re-tokenize.
-- A commit is: parquet write completes, THEN a lineage line is appended to
-  ``out/manifest.jsonl``.  A crash between the two leaves an orphan
-  directory that is overwritten on retry (idempotent).  Restart = read
-  manifest, skip committed part_ids.
+  (tested).
+- A commit is: the segment and docs writes complete, THEN a lineage line
+  is appended to ``out/manifest.jsonl``.  A crash before the append
+  leaves orphan directories that are overwritten on retry (idempotent).
+  Restart = read manifest, skip committed part_ids.
 - The reference analogue is the every-1000-docs spill + mergeAll cycle
   (IndexerInvertedCompressed.java:124-143, :301-359); here each "spill" is
   durable, attributed, and restartable.
@@ -33,7 +42,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +50,8 @@ from pyspark.sql import functions as F
 from websearchengine_spark.operators import indexer
 
 MANIFEST = "manifest.jsonl"
+STATS = "stats.json"
+TERM_STATS = "term_stats"
 
 
 @dataclass
@@ -57,6 +67,7 @@ class PartitionLineage:
     sum_tf: int
     input_fingerprint: str
     seq: int
+    avgdl: float  # the avgdl the part's block-max weights were encoded at
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
@@ -83,7 +94,18 @@ class IndexCheckpointer:
         from websearchengine_spark.functions import codec
 
         self.block_docs = block_docs or codec.BLOCK_DOCS
+        self.stats: dict | None = None  # stats.json, once opened or finished
         os.makedirs(out_dir, exist_ok=True)
+
+    @classmethod
+    def open(cls, index_dir: str) -> "IndexCheckpointer":
+        """The checkpointer of a finished index directory, at the part
+        width its ``stats.json`` records (held in ``.stats``)."""
+        with open(os.path.join(index_dir, STATS)) as f:
+            stats = json.load(f)
+        cp = cls(index_dir, docs_per_part=stats["docs_per_part"])
+        cp.stats = stats
+        return cp
 
     # -- manifest ----------------------------------------------------------
 
@@ -111,63 +133,67 @@ class IndexCheckpointer:
             f.flush()
             os.fsync(f.fileno())
 
-    # -- build -------------------------------------------------------------
+    def _part_path(self, table: str, part: int) -> str:
+        return os.path.join(self.out_dir, table, f"part={part}")
+
+    # -- write -------------------------------------------------------------
 
     def build(
         self,
-        corpus_with_ids: DataFrame,
+        docs: DataFrame,
         avgdl: float,
         fail_after_parts: int | None = None,
+        postings_of=None,
     ) -> list[PartitionLineage]:
-        """Build every uncommitted partition; returns lineage rows written
-        THIS call.  ``fail_after_parts`` injects a crash after N commits
-        (restart/resume tests).  ``avgdl`` is the collection-level estimate
-        used for block-max weights — pass the same value on resume (it is
-        recorded in the manifest rows via the fingerprint)."""
-        dpp = self.docs_per_part
-        spark = corpus_with_ids.sparkSession
-        parts_df = (
-            corpus_with_ids.select(
-                (F.col("doc_id") / F.lit(dpp)).cast("long").alias("part_id")
+        """Commit every uncommitted partition of ``docs`` (doc_id, url,
+        ...); returns lineage rows written THIS call.  A part's segments
+        encode ``postings_of(<its docs rows>)`` (default
+        ``indexer.build_postings``) at ``avgdl``, which each manifest line
+        records: a resume at another avgdl is refused.
+        ``fail_after_parts`` injects a crash after N commits
+        (restart/resume tests)."""
+        done = self.lineage()
+        other = sorted({lin.avgdl for lin in done} - {avgdl})
+        if other:
+            raise ValueError(
+                f"cannot resume at avgdl {avgdl}: the committed parts were "
+                f"encoded at {other}"
             )
-            .groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        all_parts = {r.part_id: r.n for r in parts_df.collect()}
-        done = self.committed_parts()
-        todo = sorted(set(all_parts) - done)
-        seq = len(done)
+        dpp = self.docs_per_part
+        part_of = (F.col("doc_id") / F.lit(dpp)).cast("long").alias("part_id")
+        parts = {r.part_id for r in docs.select(part_of).distinct().collect()}
+        todo = sorted(parts - {lin.part_id for lin in done})
         written: list[PartitionLineage] = []
         for i, part in enumerate(todo):
             if fail_after_parts is not None and i >= fail_after_parts:
                 raise RuntimeError(f"injected failure before part {part}")
-            lin = self._build_one(corpus_with_ids, part, avgdl, seq + i)
+            lo = part * dpp
+            sub = docs.where(F.col("doc_id").between(lo, lo + dpp - 1))
+            postings = (postings_of or indexer.build_postings)(sub)
+            lin = self._commit_one(sub, postings, part, avgdl, len(done) + i)
             self._append(lin)
             written.append(lin)
         return written
 
-    def _build_one(
-        self, corpus: DataFrame, part: int, avgdl: float, seq: int
+    def _commit_one(
+        self, sub: DataFrame, postings: DataFrame, part, avgdl, seq
     ) -> PartitionLineage:
-        dpp = self.docs_per_part
-        lo, hi = part * dpp, (part + 1) * dpp - 1
-        sub = corpus.where(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)
-        )
-        postings = indexer.build_postings(sub)
-        segs = indexer.build_segments(
+        spark = sub.sparkSession
+        seg_path = self._part_path("segments", part)
+        indexer.build_segments(
             postings,
             avgdl=avgdl,
             chunk_docs=self.chunk_docs,
             block_docs=self.block_docs,
-        )
-        path = os.path.join(self.out_dir, "segments", f"part={part}")
-        segs.write.mode("overwrite").parquet(path)
+        ).write.mode("overwrite").parquet(seg_path)
+        docs_path = self._part_path("docs", part)
+        sub.select("doc_id", F.col("url").alias("title")).write.mode(
+            "overwrite"
+        ).parquet(docs_path)
 
-        # lineage metrics from what was written (one scan of the small
-        # segment table, not the corpus)
-        seg_df = segs.sparkSession.read.parquet(path)
-        agg = seg_df.agg(
+        # lineage metrics from what was written (one scan of each small
+        # table, not the corpus)
+        agg = spark.read.parquet(seg_path).agg(
             F.count(F.lit(1)).alias("n_segments"),
             F.count_distinct("term").alias("n_terms"),
             F.sum("n_docs").alias("n_postings"),
@@ -179,7 +205,7 @@ class IndexCheckpointer:
                 + F.length("pos_bytes")
             ).alias("posting_bytes"),
         ).head()
-        sub_agg = sub.agg(
+        docs_agg = spark.read.parquet(docs_path).agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("dlo"),
             F.max("doc_id").alias("dhi"),
@@ -188,36 +214,65 @@ class IndexCheckpointer:
                     ",",
                     F.count(F.lit(1)).cast("string"),
                     # xor-fold, order-independent, no ANSI overflow
-                    F.expr("bit_xor(xxhash64(url))").cast("string"),
+                    F.expr("bit_xor(xxhash64(title))").cast("string"),
                 )
             ).alias("fp"),
         ).head()
         return PartitionLineage(
             part_id=int(part),
-            doc_lo=int(sub_agg.dlo),
-            doc_hi=int(sub_agg.dhi),
-            n_docs=int(sub_agg.n_docs),
+            doc_lo=int(docs_agg.dlo),
+            doc_hi=int(docs_agg.dhi),
+            n_docs=int(docs_agg.n_docs),
             n_postings=int(agg.n_postings or 0),
             n_segments=int(agg.n_segments or 0),
             n_terms=int(agg.n_terms or 0),
             posting_bytes=int(agg.posting_bytes or 0),
             sum_tf=int(agg.sum_tf or 0),
-            input_fingerprint=str(sub_agg.fp),
+            input_fingerprint=str(docs_agg.fp),
             seq=seq,
+            avgdl=avgdl,
         )
+
+    def finish(self, spark: SparkSession) -> dict:
+        """Derive ``term_stats`` from the committed segments (n_chunks
+        feeds WAND's prune decision) and ``stats.json``, returned, from the
+        manifest alone: exact corpus stats, no second tokenization pass."""
+        lineage = self.lineage()
+        self.segments(spark).groupBy("term").agg(
+            F.sum("n_docs").cast("long").alias("df"),
+            F.sum("sum_tf").cast("long").alias("ctf"),
+            F.count_distinct("chunk").cast("long").alias("n_chunks"),
+        ).write.mode("overwrite").parquet(
+            os.path.join(self.out_dir, TERM_STATS)
+        )
+        self.stats = {
+            "num_docs": sum(lin.n_docs for lin in lineage),
+            "total_terms": sum(lin.sum_tf for lin in lineage),
+            "avgdl": lineage[0].avgdl,
+            "docs_per_part": self.docs_per_part,
+        }
+        with open(os.path.join(self.out_dir, STATS), "w") as f:
+            json.dump(self.stats, f)
+        return self.stats
 
     # -- read --------------------------------------------------------------
 
-    def segments(self, spark: SparkSession) -> DataFrame:
-        """All committed segments (committed part dirs only — an orphan
-        from a crash mid-write is invisible until its manifest line
-        exists)."""
-        parts = sorted(self.committed_parts())
+    def _committed(self, spark: SparkSession, table: str) -> DataFrame:
+        """``table`` of the committed parts (an orphan from a crash
+        mid-write stays invisible), with the ``part`` key."""
         paths = [
-            os.path.join(self.out_dir, "segments", f"part={p}") for p in parts
+            self._part_path(table, p) for p in sorted(self.committed_parts())
         ]
         if not paths:
             raise ValueError("no committed partitions")
         return spark.read.option(
-            "basePath", os.path.join(self.out_dir, "segments")
+            "basePath", os.path.join(self.out_dir, table)
         ).parquet(*paths)
+
+    def segments(self, spark: SparkSession) -> DataFrame:
+        """All committed segments."""
+        return self._committed(spark, "segments")
+
+    def docs(self, spark: SparkSession) -> DataFrame:
+        """(doc_id, title) of every committed document."""
+        return self._committed(spark, "docs")

@@ -188,6 +188,15 @@ def term_stats(postings: DataFrame) -> DataFrame:
     )
 
 
+def mean_doc_length(postings: DataFrame, num_docs: int) -> float:
+    """avgdl over ``num_docs`` documents, zero-token ones included
+    (collection_stats, the reference's total/_numDocs): every kept token
+    is one unit of some posting's tf, so the total is the tf sum.  1.0
+    for a corpus without tokens."""
+    total = postings.agg(F.sum("tf")).head()[0] or 0
+    return total / num_docs if num_docs and total else 1.0
+
+
 def collection_stats(docs: DataFrame) -> DataFrame:
     """1-row (num_docs, total_terms, avgdl) (A4; sentinels semantics
     IndexerInvertedCompressed.java:146-147)."""

@@ -1,58 +1,64 @@
-"""Segment-merge compaction WITHOUT re-tokenizing (north_star; the
-reference's mergeAll, IndexerInvertedCompressed.java:301-359, re-reads and
-concatenates partial text indexes — we do the same at segment level).
+"""Index merge without re-tokenizing (SURVEY A7; the reference's
+mergeAll, IndexerInvertedCompressed.java:301-359, concatenates partial
+text indexes into one servable index — here at segment level).
 
-Because segment groups are keyed by ``(term, chunk)`` with chunk = doc_id
-range, two independently-built indexes over DISJOINT doc_id ranges merge by
-pure union — zero decode work.  Only colliding ``(term, chunk)`` groups
-(same doc range indexed in both inputs, e.g. a re-crawl delta) need decode
--> concat -> re-encode, and only those groups are touched: the merge cost
-is proportional to the overlap, not the index size.
+Both inputs number their documents from 0, so the merge renumbers: the
+union of the two ``docs`` tables (the delta's row wins on a url both
+hold, a re-crawl) is numbered by url rank with ``indexer.assign_doc_ids``,
+as ``cli build`` numbers a corpus.  Both inputs' segments are decoded with
+positions, remapped by a join on (input, old doc_id), and re-encoded
+through the checkpoint part writer at the union's exact avgdl, then
+finished.  The output equals ``cli build`` over the union corpus byte for
+byte (wherever that build's avgdl is exact, under its sample cap) and can
+be served and merged again.  The cost is both inputs' size, not their
+overlap.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from websearchengine_spark.operators import indexer
+from websearchengine_spark.operators.checkpoint import IndexCheckpointer
 
-_KEY = ["term", "chunk"]
 
-
-def merge_segments(
-    base: DataFrame,
-    delta: DataFrame,
-    avgdl: float,
-    chunk_docs: int = indexer.DEFAULT_CHUNK_DOCS,
-    block_docs: int | None = None,
-) -> DataFrame:
-    """Merged segment table equivalent to building from the union of the
-    two inputs' postings.  Pass the same ``avgdl``/``chunk_docs`` as the
-    original builds (block-max weights are recomputed for re-encoded
-    groups; pass-through groups keep theirs)."""
-    from websearchengine_spark.functions import codec
-
-    block_docs = block_docs or codec.BLOCK_DOCS
-    # drop whatever else the readers carry (the ``part`` key of a
-    # checkpointed index) so both sides union with the re-encoded groups
-    cols = indexer.SEGMENT_SCHEMA.fieldNames()
-    base = base.select(*cols)
-    delta = delta.select(*cols)
-
-    colliding = (
-        base.select(*_KEY).intersect(delta.select(*_KEY))
+def merge_indexes(
+    spark: SparkSession,
+    base: IndexCheckpointer,
+    delta: IndexCheckpointer,
+    out: IndexCheckpointer,
+) -> dict:
+    """Merge the committed parts of ``base`` and ``delta`` into ``out``;
+    returns ``out``'s stats."""
+    docs, postings = [], []
+    for i, cp in enumerate((base, delta)):
+        docs.append(
+            cp.docs(spark).select(
+                F.lit(i).alias("input"),
+                F.col("doc_id").alias("old_id"),
+                F.col("title").alias("url"),
+            )
+        )
+        postings.append(
+            indexer.decode_segments(cp.segments(spark), with_positions=True)
+            .withColumnRenamed("doc_id", "old_id")
+            .withColumn("input", F.lit(i))
+        )
+    union = docs[1].unionByName(docs[0].join(docs[1], "url", "left_anti"))
+    ids = indexer.assign_doc_ids(union).persist()
+    remapped = (
+        postings[0]
+        .unionByName(postings[1])
+        .join(ids.select("input", "old_id", "doc_id"), ["input", "old_id"])
+        .select(*indexer.POSTING_SCHEMA.fieldNames())
+        .persist()
     )
-    base_pass = base.join(colliding, _KEY, "left_anti")
-    delta_pass = delta.join(colliding, _KEY, "left_anti")
-    coll = base.join(colliding, _KEY, "left_semi").unionByName(
-        delta.join(colliding, _KEY, "left_semi")
+    out.build(
+        ids,
+        indexer.mean_doc_length(remapped, ids.count()),
+        postings_of=lambda sub: remapped.join(sub, "doc_id", "left_semi"),
     )
-    decoded = indexer.decode_segments(coll, with_positions=True)
-    recoded = indexer.build_segments(
-        decoded,
-        avgdl=avgdl,
-        chunk_docs=chunk_docs,
-        block_docs=block_docs,
-    )
-    return base_pass.unionByName(delta_pass).unionByName(recoded)
+    remapped.unpersist()
+    ids.unpersist()
+    return out.finish(spark)

@@ -25,6 +25,7 @@ from websearchengine_spark.functions import bm25
 from websearchengine_spark.operators import query as Q
 
 QL_BETA = 0.5
+RANK_DECIMALS = 9  # scores rank rounded to this: near-ties go to doc_id
 
 
 def _qcount_df(spark, tokens: list[str]) -> DataFrame:
@@ -103,10 +104,14 @@ def ql_scores(
 
 
 def topk(scored: DataFrame, k: int = 10) -> DataFrame:
-    """R12/R13 — desc score, doc_id tiebreak, limit k
-    (TakeOrderedAndProject; ScoredDocument.java:46-52 + our stable-tiebreak
-    contract)."""
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    """R12/R13 — desc score rounded to ``RANK_DECIMALS``, doc_id tiebreak,
+    limit k (TakeOrderedAndProject; ScoredDocument.java:46-52 + our
+    stable-tiebreak contract).  Partials reach a per-doc sum in shuffle
+    order, so tied scores can differ in the last bits; the rounding lets
+    doc_id break those ties as the oracle does.  Scores stay unrounded."""
+    return scored.orderBy(
+        F.desc(F.round("score", RANK_DECIMALS)), F.asc("doc_id")
+    ).limit(k)
 
 
 def rank_bm25(

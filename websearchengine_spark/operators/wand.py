@@ -41,9 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from websearchengine_spark.functions import bm25
-from websearchengine_spark.operators import indexer
-
-RANK_DECIMALS = 9  # scores rank rounded to this: near-ties go to doc_id
+from websearchengine_spark.operators import indexer, score
 
 
 def _weight_col(weights: dict[str, float]) -> Column:
@@ -254,15 +252,8 @@ def bm25_topk_segments(
 
 
 def _finalize(scored: DataFrame, mode: str, n_terms: int, k: int) -> DataFrame:
-    """Top k by (score desc, doc_id asc).  The score is ranked rounded to
-    ``RANK_DECIMALS``: partials reach the per-doc sum in shuffle-arrival
-    order, so mathematically tied scores can differ in the last bits, and
-    the rounding lets doc_id break those ties as the oracle does."""
+    """``score.topk`` of the docs that qualify for ``mode``."""
     out = scored
     if mode == "conjunctive":
         out = out.where(F.col("n_hit") == n_terms)
-    return (
-        out.select("doc_id", "score")
-        .orderBy(F.desc(F.round("score", RANK_DECIMALS)), F.asc("doc_id"))
-        .limit(k)
-    )
+    return score.topk(out.select("doc_id", "score"), k)

@@ -9,8 +9,8 @@ term-stats sidecar loaded into the in-memory ``{term: df}`` map (the
 reference's in-memory serve maps, IndexerInvertedCompressed serve mode).
 A word query runs WAND's single pass (or, past its chunk threshold, the
 probe/theta prune) and a phrase query the chunk-pruned positional path;
-either yields at most k ranked rows, whose titles are read with an
-``isin`` over just those ids and ordered on the driver.  A stdlib
+either yields at most k rows in ``score.topk``'s order, whose titles are
+read with an ``isin`` over just those ids.  A stdlib
 ``http.server`` front end exposes ``GET /search``.
 
 Output format: the hw1 result line ``query\tdocid\ttitle\tscore``
@@ -30,7 +30,6 @@ the mode.
 from __future__ import annotations
 
 import html as _html
-import json
 import logging
 import os
 import threading
@@ -51,8 +50,16 @@ from pyspark.sql import functions as F
 SERVE_PARTITIONS = 8
 
 
+# Live resident servers per SparkSession, with the session's shuffle width
+# from before the first: the last to close restores it (a batch job sharing
+# the session must not inherit the serve width), and a segment cache is
+# released when no live server in the session shares it.
+_RESIDENT: dict = {}  # SparkSession -> (prior width or None, [IndexServer])
+_RESIDENT_LOCK = threading.Lock()
+
+
 class IndexServer:
-    """Resident query service over a checkpointed index directory
+    """Resident query service over a finished index directory
     (``preload_stats=True``) or a one-shot batch reader over it
     (``preload_stats=False``)."""
 
@@ -61,80 +68,59 @@ class IndexServer:
 
         self.spark = spark
         self.index_dir = index_dir
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            self.stats = json.load(f)
-        self.cp = checkpoint.IndexCheckpointer(
-            index_dir, docs_per_part=self.stats["docs_per_part"]
-        )
+        self.cp = checkpoint.IndexCheckpointer.open(index_dir)
+        self.stats = self.cp.stats
         self.segs = self.cp.segments(spark)
-        self._stats_path = os.path.join(index_dir, "term_stats")
+        self._stats_path = os.path.join(index_dir, checkpoint.TERM_STATS)
         self.term_df: dict | None = None
         self.term_chunks: dict | None = None
-        self._prev_shuffle_partitions: str | None = None
         if preload_stats:
-            # serve-latency tuning applies in resident mode regardless of
-            # whether the stats sidecar exists — an index built without it
-            # still wants cached, coalesced segments.  The segment cache
-            # keeps 2x width: the WAND decode pass is CPU-bound Python and
-            # wants parallelism, while shuffle stages want few fat tasks
-            # (measured A/B in BASELINE.md)
+            # the segment cache keeps 2x width: the WAND decode pass is
+            # CPU-bound Python and wants parallelism, while shuffle stages
+            # want few fat tasks (measured A/B in BASELINE.md)
             self.segs = self.segs.coalesce(SERVE_PARTITIONS * 2).cache()
-            # session-global conf: remember the prior value so close()
-            # restores it — a batch job sharing this session must not
-            # inherit the narrow serve width
-            self._prev_shuffle_partitions = spark.conf.get(
-                "spark.sql.shuffle.partitions", None
-            )
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(SERVE_PARTITIONS)
-            )
-            if os.path.exists(self._stats_path):
-                stats_df = spark.read.parquet(self._stats_path)
-                rows = stats_df.collect()
-                self.term_df = {r.term: r.df for r in rows}
-                if "n_chunks" in stats_df.columns:
-                    self.term_chunks = {r.term: r.n_chunks for r in rows}
-        docs_path = os.path.join(index_dir, "docs")
-        self.titles = (
-            spark.read.parquet(docs_path)
-            if os.path.exists(docs_path)
-            else None
-        )
+            with _RESIDENT_LOCK:
+                _RESIDENT.setdefault(
+                    spark,
+                    (spark.conf.get("spark.sql.shuffle.partitions", None), []),
+                )[1].append(self)
+                spark.conf.set(
+                    "spark.sql.shuffle.partitions", str(SERVE_PARTITIONS)
+                )
+            rows = spark.read.parquet(self._stats_path).collect()
+            self.term_df = {r.term: r.df for r in rows}
+            self.term_chunks = {r.term: r.n_chunks for r in rows}
+        self.titles = self.cp.docs(spark)
 
     def close(self) -> None:
-        """Release the serve session's footprint: uncache the segment
-        table and restore the session's previous shuffle-partition width
-        (the resident pin is serve-only tuning, not a session policy)."""
-        try:
-            self.segs.unpersist()
-        except Exception:
-            pass
-        if self._prev_shuffle_partitions is not None:
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                self._prev_shuffle_partitions,
-            )
-            self._prev_shuffle_partitions = None
+        """Release a resident server's footprint: its segment cache once
+        no other live server in the session shares it, and the pinned
+        shuffle-partition width once it is the session's last."""
+        with _RESIDENT_LOCK:
+            prior, live = _RESIDENT.get(self.spark, (None, []))
+            if self not in live:  # a batch reader, or closed already
+                return
+            live.remove(self)
+            if not any(o.segs.sameSemantics(self.segs) for o in live):
+                self.segs.unpersist()
+            if not live:
+                del _RESIDENT[self.spark]
+                if prior is not None:
+                    self.spark.conf.set(
+                        "spark.sql.shuffle.partitions", prior
+                    )
 
-    def _term_maps_for(
-        self, words: list[str]
-    ) -> tuple[dict | None, dict | None]:
+    def _term_maps_for(self, words: list[str]) -> tuple[dict, dict]:
         """({term: df}, {term: n_chunks}) — preloaded in resident mode,
         else one filtered sidecar read (isin pushes into the scan)."""
         if self.term_df is not None:
             return self.term_df, self.term_chunks
-        if not os.path.exists(self._stats_path):
-            return None, None
-        stats_df = self.spark.read.parquet(self._stats_path).where(
-            F.col("term").isin(words)
+        rows = (
+            self.spark.read.parquet(self._stats_path)
+            .where(F.col("term").isin(words))
+            .collect()
         )
-        rows = stats_df.collect()
-        chunks = (
-            {r.term: r.n_chunks for r in rows}
-            if "n_chunks" in stats_df.columns
-            else None
-        )
-        return {r.term: r.df for r in rows}, chunks
+        return {r.term: r.df for r in rows}, {r.term: r.n_chunks for r in rows}
 
     def _rank(self, q: str, k: int, mode: str) -> list:
         """The <= k ranked rows (doc_id, score) of ``q``, best-first — WAND
@@ -180,11 +166,7 @@ class IndexServer:
                 eager=True,
                 term_chunks=term_chunks,
             )
-        ranked = out.collect()
-        ranked.sort(
-            key=lambda r: (-round(r.score, wand.RANK_DECIMALS), r.doc_id)
-        )
-        return ranked
+        return out.collect()
 
     def query(
         self, q: str, k: int = 10, mode: str = "conjunctive"
@@ -193,7 +175,7 @@ class IndexServer:
         <= k ranked ids only."""
         ranked = self._rank(q, k, mode)
         titles = {}
-        if ranked and self.titles is not None:
+        if ranked:
             ids = [r.doc_id for r in ranked]
             titles = {
                 r.doc_id: r.title

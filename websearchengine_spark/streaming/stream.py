@@ -18,9 +18,9 @@ Five streaming shapes:
 - incremental index build via ``foreachBatch``: each micro-batch of new
   documents runs the SAME map-side posting/segment pipeline
   (operators/indexer.py) and lands as a new committed partition through
-  the checkpoint manifest — streaming and batch builds share one code
-  path, so streaming output merges with batch indexes via
-  operators/merge.py without re-tokenizing.
+  the checkpoint manifest, which is then finished — streaming and batch
+  builds share one code path, so the streaming output can be served, and
+  merges with batch indexes via operators/merge.py without re-tokenizing.
 
 Tests drive these with file sources + ``trigger(availableNow=True)`` and
 assert equality with the batch computation.
@@ -231,8 +231,9 @@ def incremental_index_query(
     docs_per_part: int = 1 << 16,
 ):
     """Streaming index build: every micro-batch is tokenized/encoded with
-    the batch pipeline and committed through the lineage manifest.  Returns
-    the (unstarted) DataStreamWriter; caller picks the trigger.
+    the batch pipeline, committed through the lineage manifest and
+    finished, so the index can be served after any batch.  Returns the
+    (unstarted) DataStreamWriter; caller picks the trigger.
 
     doc_ids in a streaming context come from the batch's dense range:
     each micro-batch claims the range after the current manifest maximum —
@@ -255,6 +256,7 @@ def incremental_index_query(
             "doc_id", F.col("doc_id") + F.lit(start_part * docs_per_part)
         )
         cp.build(ids, avgdl=avgdl)
+        cp.finish(batch_df.sparkSession)
 
     return (
         corpus_stream.writeStream.outputMode("update")
